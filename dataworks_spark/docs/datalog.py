@@ -100,6 +100,22 @@ def _nested_rule_calls(clauses, names: set) -> set:
     return out
 
 
+def _mentions(x, var: str) -> bool:
+    """True if ``var`` occurs anywhere in a (nested) clause structure."""
+    if isinstance(x, (list, tuple)):
+        return any(_mentions(y, var) for y in x)
+    return isinstance(x, str) and x == var
+
+
+def _rename(x, old: str, new: str):
+    """A clause structure with every occurrence of variable ``old``
+    replaced by ``new``; lists stay lists and tuples stay tuples, so
+    the result compares equal to a hand-written renamed clause list."""
+    if isinstance(x, (list, tuple)):
+        return type(x)(_rename(y, old, new) for y in x)
+    return new if isinstance(x, str) and x == old else x
+
+
 @dataclass
 class Rule:
     """A Datalog rule (Crux rule surface, db/app_db.clj:115-126).
@@ -114,8 +130,11 @@ class Rule:
       ``head`` lists the rule's variables; each body is a list of
       clauses (triples, predicates, or rule calls — including calls to
       *itself*, possibly several times per body, i.e. nonlinear
-      recursion). Non-recursive bodies seed the fixpoint; recursive
-      bodies are iterated to convergence with SEMI-NAIVE evaluation
+      recursion). A rule that is the transitive closure of its base —
+      ``R(a,m), R(m,b)``, or the linear ``E(a,m), R(m,b)`` /
+      ``R(a,m), E(m,b)`` — compiles to path doubling like the
+      shorthand. Otherwise non-recursive bodies seed the fixpoint;
+      recursive bodies are iterated to convergence with SEMI-NAIVE evaluation
       (deltas substituted per self-call position) and per-round
       lineage checkpoints — each round is one batch of joins, so a
       depth-d graph needs ≤d driver rounds (≤⌈log₂ d⌉ for nonlinear
@@ -500,8 +519,10 @@ class DatalogDB:
     ) -> DataFrame:
         """Materialize a rule's derived relation (columns = head vars).
 
-        Shorthand rules (edge_attr) compile to the log-depth
-        path-doubling closure. General rules run a SEMI-NAIVE fixpoint
+        Shorthand rules (edge_attr) — and general rules recognized as
+        the transitive closure of their base (``_is_transitive_rule``,
+        ``_is_linear_closure_rule``) — compile to the log-depth
+        path-doubling closure. Other general rules run a SEMI-NAIVE fixpoint
         (the standard Datalog evaluation): the union of non-recursive
         bodies seeds relation and delta; each round derives only tuples
         reachable *through the delta* — every recursive body is
@@ -707,7 +728,7 @@ class DatalogDB:
                     new_deltas[r.name] = new
                     if r.name in rels:
                         next_rels[r.name] = (
-                            rt.lift(rels[r.name].unionByName(new))
+                            rt.lift(rt.accumulate(rels[r.name], new))
                             .localCheckpoint(eager=False)
                         )
                         counts[r.name] += n_new
@@ -796,16 +817,20 @@ class DatalogDB:
             rule_env[rule.name] = rel
             return rel
 
-        if self._is_transitive_rule(rule, rec_bodies):
+        if self._is_transitive_rule(rule, rec_bodies) or self._is_linear_closure_rule(
+            rule, rec_bodies
+        ):
             # Transitive-rule recognition: R(a,b) :- <base>; R(a,m),
-            # R(m,b) is exactly the transitive closure of the base
-            # relation, so compile to the log-depth path-doubling
-            # operator (1 join/round, ⌈log₂ depth⌉ rounds) instead of
-            # the general semi-naive loop, whose per-round plan
-            # re-construction through the clause compiler costs ~2× per
-            # materialization. Classic Datalog engine optimization —
-            # semantics are identical (proved against the general path
-            # and DuckDB WITH RECURSIVE in tests).
+            # R(m,b) — and the linear forms R(a,b) :- E(a,m), R(m,b) /
+            # R(a,m), E(m,b) with E the base body — are exactly the
+            # transitive closure of the base relation, so compile to the
+            # log-depth path-doubling operator (1 join/round, ⌈log₂
+            # depth⌉ rounds) instead of the general semi-naive loop,
+            # which needs one round per unit of depth and re-builds each
+            # round's plan through the clause compiler. Classic Datalog
+            # engine optimization — semantics are identical (proved
+            # against the general path and DuckDB WITH RECURSIVE in
+            # tests).
             closure = transitive_closure(
                 rel,
                 head_vars[0],
@@ -869,6 +894,47 @@ class DatalogDB:
             and mid not in rule.head
         )
 
+    @staticmethod
+    def _is_linear_closure_rule(rule: "Rule", rec_bodies: list[list[tuple]]) -> bool:
+        """True iff the rule is a linear transitive closure of its one
+        base body ``E``, in either direction:
+
+        * right-linear ``R(a,b) :- E(a,b); R(a,b) :- E(a,m), R(m,b)``
+        * left-linear  ``R(a,b) :- E(a,b); R(a,b) :- R(a,m), E(m,b)``
+
+        i.e. the recursive body is the base body with ONE head variable
+        renamed to a fresh ``m`` (absent from the head and the base
+        body) plus exactly one self-call joining on ``m``. A second
+        base body would make the fixpoint E* ∘ (E ∪ E2), not a closure,
+        so exactly one base and one recursive body are required."""
+        if len(rec_bodies) != 1 or len(rule.head) != 2:
+            return False
+        bases = [
+            body for body in rule.bodies
+            if not any(isinstance(c[0], str) and c[0] == rule.name for c in body)
+        ]
+        if len(bases) != 1:
+            return False
+        a, b = rule.head
+        body = rec_bodies[0]
+        calls = [i for i, c in enumerate(body) if c[0] == rule.name]
+        if len(calls) != 1 or len(body[calls[0]]) != 3:
+            return False
+        _, x, y = body[calls[0]]
+        rest = body[: calls[0]] + body[calls[0] + 1 :]
+        base = list(bases[0])
+        # (renamed head var, middle var, self-call keeps the other one)
+        for old, mid, keeps in ((b, x, y == b), (a, y, x == a)):
+            if (
+                keeps
+                and _is_var(mid)
+                and mid not in rule.head
+                and not _mentions(base, mid)
+                and rest == _rename(base, old, mid)
+            ):
+                return True
+        return False
+
     def _fixpoint(
         self, rule, rule_map, rule_env, rec_bodies, head_vars, tagged, prev, rt
     ) -> DataFrame:
@@ -902,7 +968,7 @@ class DatalogDB:
             # lift the round's relation onto the loop session so its
             # checkpoint+count action plans under loop-sized confs
             # without touching the caller's session (adaptive_rounds)
-            tagged = rt.lift(tagged.unionByName(new)).localCheckpoint(eager=False)
+            tagged = rt.lift(rt.accumulate(tagged, new)).localCheckpoint(eager=False)
             cur = tagged.count()
             if cur == prev:
                 break

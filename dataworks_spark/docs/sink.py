@@ -120,7 +120,7 @@ class DocStoreSink:
         # (In-process store ⇒ in-process ledger; a table-format backend
         # would instead record the epoch in the same transaction,
         # e.g. txnAppId/txnVersion.)
-        if epoch_id in self._applied_epochs or batch_df.isEmpty():
+        if epoch_id in self._applied_epochs:
             return
         idc = F.col(self._id_col) if isinstance(self._id_col, str) else self._id_col
         # drop the source column only when it is NOT already named "id"
@@ -131,7 +131,11 @@ class DocStoreSink:
             if isinstance(self._id_col, str) and self._id_col != "id"
             else []
         )
+        # ONE scan of the micro-batch source: the emptiness probe reads
+        # the checkpointed rows, not the source a second time
         rows = batch_df.withColumn("id", idc).drop(*drop).localCheckpoint()
+        if rows.isEmpty():
+            return
 
         def _apply(s: DocumentStore) -> DocumentStore:
             if epoch_id in self._applied_epochs:  # raced retry

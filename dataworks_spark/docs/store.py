@@ -262,39 +262,38 @@ class DocumentStore:
     interval)* at read time; a periodic :meth:`compact` rewrites closed
     intervals physically (the MERGE analog). ``await-tx`` (J6) is a
     no-op: Spark writes are synchronous.
+
+    Each write materializes ONCE, inside the write call, into a local
+    checkpoint: the returned store's ``versions`` is a single
+    checkpointed leaf, so reads and later writes plan against it and
+    never re-execute an earlier write's joins.
+
+    Fault tolerance: a local checkpoint's blocks live on the executors
+    and have no lineage to recompute from. Losing an executor that
+    holds them (failure, dynamic-allocation decommission) makes later
+    reads of this in-process store fail, and each write's blocks stay
+    pinned until the store object is garbage-collected. Durable state
+    comes from :meth:`compact` with a ``path`` (or
+    :meth:`compact_incremental`), or from
+    ``DocStoreSink(durable_path=...)``, which compacts every applied
+    micro-batch to parquet and re-roots the store on the files.
     """
 
-    #: logical-plan growth bound for the in-process write chain (r16):
-    #: every _apply_write / put_log references ``self.versions`` in ~3
-    #: subtrees (retire, correct, next-version lookup), so an n-write
-    #: chain re-analyzes ~3^n copies of the base plan at EVERY later
-    #: action — Catalyst analysis, not job work (measured: a 4-write
-    #: chain's four as_of probes cost 80 s in the r16 suite; the r15
-    #: bitemporal property file hit 826 s the same way). After this many
-    #: consecutive writes the new version log is marked
-    #: localCheckpoint(eager=False): the ≤3^k-copy tree is planned once,
-    #: the checkpoint materializes with the caller's next action (no
-    #: extra job), and later writes/reads plan against a single leaf.
-    #: A parquet-backed store keeps scan pushdown for the first k
-    #: writes; past that the tree is unions-of-joins and pushdown was
-    #: already gone — periodic compaction is this store's documented
-    #: contract, this automates the in-process form of it.
-    _TRUNCATE_EVERY = 2
-
-    def __init__(self, versions: DataFrame, now_fn=None, _writes: int = 0):
+    def __init__(self, versions: DataFrame, now_fn=None):
         self.versions = versions
         self._now = now_fn or _dt.datetime.utcnow
-        self._writes = _writes
 
     def _evolved(self, versions: DataFrame) -> "DocumentStore":
-        """Successor store after one write, with depth-bounded lineage
-        (see _TRUNCATE_EVERY)."""
-        n = self._writes + 1
-        if n >= self._TRUNCATE_EVERY:
-            return DocumentStore(
-                versions.localCheckpoint(eager=False), self._now
-            )
-        return DocumentStore(versions, self._now, _writes=n)
+        """Successor store after one write: the write's plan is marked
+        ``localCheckpoint(eager=False)`` so the successor's version log
+        is ONE leaf. Every _apply_write / put_log references
+        ``self.versions`` in ~3 subtrees (retire, correct, next-version
+        lookup), so an unmaterialized n-write chain re-analyzes ~3^n
+        copies of the base plan at every later action. Under AQE the
+        non-eager checkpoint still executes the write's shuffle stages
+        inside this call, so each write's join tree runs exactly once:
+        no later read or write re-executes it."""
+        return DocumentStore(versions.localCheckpoint(eager=False), self._now)
 
     # -- reads ---------------------------------------------------------
     def as_of(self, valid_time, tx_time=None) -> DataFrame:

@@ -1826,10 +1826,11 @@ def winnow_postings(fps: DataFrame, max_keep_df: int | None = None) -> DataFrame
     aggregation buffer — at corpus scale one boilerplate fingerprint
     with df in the millions materializes a single multi-million-element
     array row during the asset build (guide §2.2: a single enormous
-    key no mitigation can split). With ``max_keep_df`` set, df is
-    pre-counted per fingerprint and hot fingerprints are dropped from
-    the collect by an anti-join BEFORE aggregation; the output gains an
-    exact ``df`` column (long) and hot rows are kept as
+    key no mitigation can split). With ``max_keep_df`` set, a window
+    over ``fp`` counts the exact df and numbers each fingerprint's rows
+    in the same shuffle, and a filter BEFORE aggregation keeps every row
+    of a cold fingerprint but only one row of a hot one; the output
+    gains an exact ``df`` column (long) and hot rows are kept as
     ``(fp, ds=NULL, df)`` so the stored asset still serves df
     statistics. Any policy with ``max_df ≤ max_keep_df`` reads
     identical pairs; :func:`winnow_pairs_from_postings` refuses loudly
@@ -1849,7 +1850,8 @@ def winnow_postings(fps: DataFrame, max_keep_df: int | None = None) -> DataFrame
     # keeps every row of a cold fingerprint but exactly ONE row of a
     # hot one — so no aggregation buffer ever holds more than
     # max_keep_df elements — and the final aggregate reuses the
-    # window's hash partitioning (no second exchange, plan-asserted).
+    # window's hash partitioning (no second exchange; plan-asserted in
+    # test_winnow_postings_max_keep_df_hot_key).
     from pyspark.sql import Window
 
     wp = Window.partitionBy("fp")

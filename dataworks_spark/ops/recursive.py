@@ -142,15 +142,25 @@ def _lift(df: DataFrame, session) -> DataFrame:
 class _FixpointRuntime:
     """Yielded by :func:`adaptive_rounds`. Callable (``rt(rows)``)
     resizes the loop session's shuffle partitions from the exact
-    materialized count; ``rt.lift(df)`` re-roots a round's relation on
-    the loop session so its checkpoint+count action executes there."""
+    materialized count and keeps that count in ``rt.partitions``;
+    ``rt.lift(df)`` re-roots a round's relation on the loop session so
+    its checkpoint+count action executes there."""
 
     def __init__(self, spark):
         self.session = _fixpoint_session(spark)
+        self.partitions: int | None = None
 
     def __call__(self, rows: int) -> None:
-        n = max(1, math.ceil(rows * _ROW_BYTES / _TARGET_PARTITION_BYTES))
-        self.session.conf.set("spark.sql.shuffle.partitions", str(n))
+        self.partitions = max(1, math.ceil(rows * _ROW_BYTES / _TARGET_PARTITION_BYTES))
+        self.session.conf.set("spark.sql.shuffle.partitions", str(self.partitions))
+
+    def accumulate(self, rel: DataFrame, new: DataFrame) -> DataFrame:
+        """``rel ∪ new`` coalesced to this round's partition count. A
+        bare union carries both inputs' partitions, so a relation that
+        is re-checkpointed every round would gain ``rt.partitions``
+        partitions (and tasks) per round; the narrow coalesce keeps it
+        flat without a shuffle."""
+        return rel.unionByName(new).coalesce(self.partitions)
 
     def lift(self, df: DataFrame) -> DataFrame:
         return _lift(df, self.session)
@@ -389,7 +399,7 @@ def _semi_naive(
             new = grown.join(tagged, on=[src, dst], how="left_anti").withColumn(
                 "__round", F.lit(rnd)
             )
-            tagged = rt.lift(tagged.unionByName(new)).localCheckpoint(eager=False)
+            tagged = rt.lift(rt.accumulate(tagged, new)).localCheckpoint(eager=False)
             cur = tagged.count()
             if cur == prev:
                 return _lift(tagged.drop("__round"), caller)

@@ -109,18 +109,11 @@ def _build_store(spark, ops):
             ids = spark.createDataFrame([(doc_id,)], "id string")
             store = store.delete(ids)
         brute.apply(kind, doc_id, body, vt_off, tx)
-        # r16 suite-wallclock fix (r15 VERDICT #1): every _apply_write
-        # references the prior version relation in THREE subtrees
-        # (retired / corrected / next_vf), so a 6-op lazy chain grows
-        # the plan ~3^6 and Catalyst ANALYSIS — not the data — was
-        # ~50 s per hypothesis example. Compacting (localCheckpoint,
-        # the store's own lineage-truncation API) every other op keeps
-        # the asserted semantics bit-identical — compaction never
-        # changes the version relation's ROWS — while the plan stays
-        # two ops deep; odd steps still exercise the uncompacted
-        # lazy-chain path.
-        if i % 2 == 1:
-            store = store.compact()
+        # every write returns a store whose version relation is one
+        # checkpointed leaf, so the chain's plan never grows with the
+        # op count (each _apply_write references the prior relation in
+        # THREE subtrees — an unmaterialized 6-op chain would re-analyze
+        # ~3^6 plan copies per read) and no explicit compaction is needed
     return store.compact(), brute
 
 

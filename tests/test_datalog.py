@@ -231,9 +231,11 @@ def test_general_rule_nonlinear_recursion(db, spark):
 
 
 def test_general_rule_linear_recursion_not_tc_shortcut(db, spark):
-    """LINEAR recursive rule — reach(a,b) := edge(a,b) | reach(a,m) ∧
-    edge(m,b). The transitive-rule recognizer must NOT fire (only one
-    self-call), so this pins the general semi-naive fixpoint path."""
+    """LEFT-LINEAR recursive rule — reach(a,b) := edge(a,b) | reach(a,m)
+    ∧ edge(m,b). The self-transitivity recognizer does not fire (one
+    self-call), but the linear-closure recognizer does, so this runs on
+    the path-doubling closure; the general semi-naive fixpoint is
+    pinned by test_general_rule_linear_non_closure_semi_naive."""
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("x", "y")],
         "fid string, dep string",
@@ -262,10 +264,160 @@ def test_transitive_recognizer_shape_gate():
     bad = [[("r", "?a", "?b"), ("r", "?b", "?b")]]
     r2 = Rule("r", head=("?a", "?b"), bodies=[[("?a", "e/d", "?b")], bad[0]])
     assert not DatalogDB._is_transitive_rule(r2, bad)
-    # linear recursion (one self-call) → general path
+    # linear recursion (one self-call) is not THIS shape — it has its
+    # own recognizer (test_linear_closure_recognizer_shape_gate)
     lin = [[("r", "?a", "?m"), ("?m", "e/d", "?b")]]
     r3 = Rule("r", head=("?a", "?b"), bodies=[[("?a", "e/d", "?b")], lin[0]])
     assert not DatalogDB._is_transitive_rule(r3, lin)
+
+
+def test_linear_closure_recognizer_shape_gate():
+    """The linear-closure recognizer fires on the right- and left-linear
+    closure of the single base body, and on nothing else."""
+    from dataworks_spark.docs.datalog import DatalogDB
+
+    base = [("?a", "e/d", "?b")]
+
+    def fires(rec, bases=(base,)):
+        r = Rule("r", head=("?a", "?b"), bodies=[*bases, rec])
+        return DatalogDB._is_linear_closure_rule(r, [list(rec)])
+
+    assert fires([("?a", "e/d", "?m"), ("r", "?m", "?b")])  # right-linear
+    assert fires([("r", "?a", "?m"), ("?m", "e/d", "?b")])  # left-linear
+    # a multi-clause base renamed consistently still is a closure
+    two_hop = [("?a", "e/d", "?x"), ("?x", "e/d", "?b")]
+    assert fires(
+        [("?a", "e/d", "?x"), ("?x", "e/d", "?m"), ("r", "?m", "?b")],
+        bases=(two_hop,),
+    )
+    # different base attribute in the recursive body
+    assert not fires([("?a", "e/other", "?m"), ("r", "?m", "?b")])
+    # the middle variable is a head variable
+    assert not fires([("?a", "e/d", "?a"), ("r", "?a", "?b")])
+    # a constant in the middle position: R(a,b) :- E(a,"x"), R("x",b)
+    assert not fires([("?a", "e/d", "x"), ("r", "x", "?b")])
+    # an extra body clause
+    assert not fires([("?a", "e/d", "?m"), ("?m", "e/k", "fn"), ("r", "?m", "?b")])
+    # two self-calls
+    assert not fires([("?a", "e/d", "?m"), ("r", "?m", "?n"), ("r", "?n", "?b")])
+    # the self-call does not keep the other head variable in place
+    assert not fires([("?a", "e/d", "?m"), ("r", "?b", "?m")])
+    # two base bodies: the fixpoint is E* ∘ (E ∪ E2), not a closure
+    assert not fires(
+        [("?a", "e/d", "?m"), ("r", "?m", "?b")],
+        bases=(base, [("?a", "e/x", "?b")]),
+    )
+
+
+def _bfs_pairs(edges):
+    adj: dict = {}
+    for s, d in edges:
+        adj.setdefault(s, set()).add(d)
+    out = set()
+    for s in adj:
+        seen, stack = set(), [s]
+        while stack:
+            for d in adj.get(stack.pop(), ()):
+                if d not in seen:
+                    seen.add(d)
+                    stack.append(d)
+        out |= {(s, d) for d in seen}
+    return out
+
+
+def test_linear_closure_rules_match_semi_naive_on_cycles(spark, monkeypatch):
+    """Right- and left-linear closure rules route to path doubling (the
+    general fixpoint is made to raise) and return exactly what the
+    general semi-naive fixpoint returns for the same rule, over a graph
+    with two cycles, a self-loop and a tail."""
+    from dataworks_spark.docs.datalog import DatalogDB
+
+    edges = [
+        ("a", "b"), ("b", "c"), ("c", "a"),  # 3-cycle
+        ("c", "d"), ("d", "e"), ("e", "f"), ("f", "d"),  # second cycle
+        ("f", "g"), ("g", "g"),  # self-loop
+        ("x", "a"),  # tail into the cycle
+    ]
+    d = DatalogDB(spark)
+    d.register("cyc", spark.createDataFrame(edges, "src string, dep string"), "src")
+    bodies = {
+        "right": [("?a", "cyc/dep", "?m"), ("reach", "?m", "?b")],
+        "left": [("reach", "?a", "?m"), ("?m", "cyc/dep", "?b")],
+    }
+    want = _bfs_pairs(edges)
+
+    def run(rec):
+        rule = Rule("reach", head=("?a", "?b"), bodies=[[("?a", "cyc/dep", "?b")], rec])
+        out = d.q(find=["?a", "?b"], where=[("reach", "?a", "?b")], rules=[rule])
+        return {(r.a, r.b) for r in out.collect()}
+
+    def general_path_forbidden(*_a, **_k):
+        raise AssertionError("linear closure rule took the general fixpoint")
+
+    for rec in bodies.values():
+        with monkeypatch.context() as m:
+            m.setattr(DatalogDB, "_fixpoint", general_path_forbidden)
+            doubled = run(rec)
+        with monkeypatch.context() as m:
+            m.setattr(DatalogDB, "_is_linear_closure_rule", staticmethod(lambda *_: False))
+            general = run(rec)
+        assert doubled == general == want
+
+
+def test_general_rule_linear_non_closure_semi_naive(spark, monkeypatch):
+    """A linear rule that is NOT closure-shaped — reach from typed
+    sources: reach(a,b) :- kind(a)=src ∧ dep(a,b); reach(a,m) ∧
+    dep(m,b) — runs the general semi-naive fixpoint over a 14-node
+    chain (13 rounds). Each round's relation is coalesced to the round's
+    partition target, so its partition count does not grow with the
+    rounds; the answer is the BFS closure from the typed sources."""
+    from dataworks_spark.docs.datalog import DatalogDB
+    from dataworks_spark.ops.recursive import _FixpointRuntime
+
+    n = 14
+    chain = [(f"n{i}", f"n{i + 1}") for i in range(n - 1)]
+    kinds = {f"n{i}": ("src" if i % 3 == 0 else "mid") for i in range(n)}
+    d = DatalogDB(spark)
+    d.register(
+        "node",
+        spark.createDataFrame(
+            [(s, t, kinds[s]) for s, t in chain], "id string, dep string, kind string"
+        ),
+        "id",
+    )
+    rule = Rule(
+        "reach",
+        head=("?a", "?b"),
+        bodies=[
+            [("?a", "node/kind", "src"), ("?a", "node/dep", "?b")],
+            [("reach", "?a", "?m"), ("?m", "node/dep", "?b")],
+        ],
+    )
+    parts: list[tuple[int, int]] = []
+    orig = _FixpointRuntime.accumulate
+
+    def spy(self, rel, new):
+        out = orig(self, rel, new)
+        parts.append((self.lift(out).rdd.getNumPartitions(), self.partitions))
+        return out
+
+    monkeypatch.setattr(_FixpointRuntime, "accumulate", spy)
+    out = d.q(find=["?a", "?b"], where=[("reach", "?a", "?b")], rules=[rule])
+    got = {(r.a, r.b) for r in out.collect()}
+    want = {(s, t) for s, t in _bfs_pairs(chain) if kinds[s] == "src"}
+    assert got == want
+    assert len(parts) >= 10, parts  # one accumulate per fixpoint round
+    assert all(p <= target for p, target in parts), parts
+
+    # the same bound holds in ops.recursive's semi-naive closure loop
+    from dataworks_spark.ops.recursive import transitive_closure
+
+    parts.clear()
+    edges = spark.createDataFrame(chain, "src string, dst string")
+    tc = transitive_closure(edges, "src", "dst", method="semi_naive")
+    assert {(r.src, r.dst) for r in tc.collect()} == _bfs_pairs(chain)
+    assert len(parts) >= 10, parts
+    assert all(p <= target for p, target in parts), parts
 
 
 # ── r9 fourth-review regressions ─────────────────────────────────────

@@ -506,3 +506,41 @@ def test_store_refuses_tampered_version_log(spark, tmp_path):
     s2 = s.compact_incremental(path, since=T0)
     assert s2.latest().count() == 2
     DocumentStore.load(spark, path)
+
+
+@pytest.mark.parametrize("op", ["put", "put_log", "delete", "match_put"])
+def test_each_write_leaves_one_checkpointed_leaf(spark, op):
+    """Every write materializes once into a local checkpoint: the
+    returned store's optimized ``versions`` plan is a single leaf with
+    no Join, on the first write of a chain and on the second alike —
+    so no read or later write re-executes an earlier write's joins."""
+    s, clock = _store(spark, [("a", "x"), ("b", "y")], T0)
+    for step, (now, doc_id) in enumerate(((T1, "a"), (T2, "b"))):
+        clock["now"] = now
+        if op == "put":
+            s = s.put(spark.createDataFrame([(doc_id, f"p{step}")], "id string, body string"))
+        elif op == "put_log":
+            s = s.put_log(
+                spark.createDataFrame(
+                    [(doc_id, f"l{step}", now)], "id string, body string, ts timestamp"
+                )
+            )
+        elif op == "delete":
+            s = s.delete(spark.createDataFrame([(doc_id,)], "id string"))
+        else:
+            cur = s.latest().filter(F.col("id") == doc_id).select("id", "body")
+            s = s.match_put(
+                spark.createDataFrame([(doc_id, f"m{step}")], "id string, body string"),
+                cur,
+                on_payload=["body"],
+            )
+        plan = s.versions._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan, (op, step, plan)
+    latest = {r.id: r.body for r in s.latest().collect()}
+    want = {
+        "put": {"a": "p0", "b": "p1"},
+        "put_log": {"a": "l0", "b": "l1"},
+        "delete": {},
+        "match_put": {"a": "m0", "b": "m1"},
+    }[op]
+    assert latest == want

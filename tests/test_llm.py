@@ -3767,9 +3767,10 @@ def test_winnow_postings_max_keep_df_hot_key(spark):
     (fp, ds=NULL, exact df) so the stored asset still serves df
     statistics, pair outputs are unchanged for every policy within the
     cap, and banding PAST the cap raises instead of silently dropping
-    pairs. Plan check: the capped build's collect aggregate sits above
-    the df-fold anti-join, so the hot fp's doc list never enters an
-    aggregation buffer."""
+    pairs. Plan check: the capped build shuffles on fp exactly once,
+    and the df/row-number filter sits below the collect_list
+    aggregates, so the hot fp's doc list never enters an aggregation
+    buffer."""
     import pytest
 
     from dataworks_spark.llm.dedup import (
@@ -3813,12 +3814,19 @@ def test_winnow_postings_max_keep_df_hot_key(spark):
         winnow_pairs_from_postings(capped, max_df=30).count()
     with pytest.raises(ValueError, match="max_keep_df"):
         winnow_postings(fps, max_keep_df=0)
-    # plan: the collect_list aggregate reads the anti-joined (capped)
-    # relation — the join sits BELOW the object aggregate
+    # plan: ONE fp-keyed exchange feeds both windows and the aggregate,
+    # and the collect_list aggregates (final and partial) read the
+    # window's capped rows — the __rn/df filter sits BELOW both
     plan = capped._jdf.queryExecution().executedPlan().toString()
-    agg_pos = plan.find("collect_list")
-    join_pos = plan.find("Join")
-    assert 0 <= agg_pos < join_pos, plan[:2000]
+    plan = plan.split("== Initial Plan ==")[-1]  # one tree if AQE ran
+    assert plan.count("Exchange hashpartitioning(fp") == 1, plan[:3000]
+    lines = plan.splitlines()
+    agg_line = max(i for i, ln in enumerate(lines) if "collect_list" in ln)
+    filter_line = next(
+        i for i, ln in enumerate(lines)
+        if "Filter" in ln and "__rn" in ln and "df" in ln
+    )
+    assert agg_line < filter_line, plan[:3000]
 
 
 def test_minhash_inline_cap_filters_before_collect(spark):

@@ -64,9 +64,10 @@ def test_unbounded_semi_naive_closure_matches_duckdb(spark):
 
 
 def test_unbounded_nonlinear_rule_matches_duckdb(spark):
-    """The general-rule semi-naive engine (not the doubling shorthand)
-    on the same unbounded edge set: reach(a,b) :- edge(a,b);
-    reach(a,m), reach(m,b)."""
+    """A general NONLINEAR rule (not the ``edge_attr`` shorthand) on the
+    same unbounded edge set: reach(a,b) :- edge(a,b); reach(a,m),
+    reach(m,b) — recognized as self-transitivity and compiled to path
+    doubling."""
     db = DatalogDB(spark)
     db.register("edge", _edges(spark), "src")
     reach = Rule(
@@ -83,9 +84,11 @@ def test_unbounded_nonlinear_rule_matches_duckdb(spark):
 
 
 def test_unbounded_linear_rule_general_fixpoint_matches_duckdb(spark):
-    """The GENERAL semi-naive fixpoint (the transitive-rule recognizer
-    must not fire on linear recursion) on the same unbounded edge set:
-    reach(a,b) :- edge(a,b); reach(a,m), edge(m,b)."""
+    """A general LEFT-LINEAR rule on the same unbounded edge set:
+    reach(a,b) :- edge(a,b); reach(a,m), edge(m,b). The linear-closure
+    recognizer routes it to path doubling; the general semi-naive
+    fixpoint is covered by test_datalog's non-closure linear rule and
+    its parity test over cyclic graphs."""
     db = DatalogDB(spark)
     db.register("edge", _edges(spark), "src")
     reach = Rule(

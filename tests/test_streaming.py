@@ -332,6 +332,34 @@ def test_docstore_sink_idempotent_per_epoch(spark):
     assert {r.value for r in sink.store.latest().collect()} == {2.0}
 
 
+def test_docstore_sink_empty_batch_applies_nothing(spark):
+    """An empty micro-batch writes no version and is NOT recorded as
+    applied: the emptiness probe reads the batch's checkpointed rows
+    (one scan of the source), and a later non-empty delivery of the
+    same epoch still applies."""
+    import datetime as dt
+
+    from dataworks_spark.docs.sink import DocStoreSink
+    from dataworks_spark.docs.store import DocumentStore
+
+    schema = "k string, value double, ts timestamp"
+    empty_store = spark.createDataFrame(
+        [],
+        "id string, value double, valid_from timestamp, valid_to timestamp, "
+        "tx_from timestamp, tx_to timestamp, deleted boolean",
+    )
+    sink = DocStoreSink(DocumentStore(empty_store), id_col="k", ts_col="ts")
+    before = sink.store
+    sink.foreach_batch(spark.createDataFrame([], schema), epoch_id=3)
+    assert sink.batches_applied == 0
+    assert 3 not in sink._applied_epochs
+    assert sink.store is before  # no write, not even an empty one
+    batch = spark.createDataFrame([("a", 1.0, dt.datetime(2024, 1, 1))], schema)
+    sink.foreach_batch(batch, epoch_id=3)
+    assert sink.batches_applied == 1
+    assert [r.value for r in sink.store.latest().collect()] == [1.0]
+
+
 def test_streaming_dedup_within_watermark(spark, tmp_path):
     """Streaming-native exact dedup (L1 streaming twin, complementing
     the stateful seen_filter): dropDuplicatesWithinWatermark drops
