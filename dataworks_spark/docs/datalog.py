@@ -122,23 +122,28 @@ class Rule:
 
     Two forms:
 
-    * shorthand ``Rule("depends", "ns/field")`` — the linear binary
-      transitive closure the reference's commented example uses
-      (db/app_db.clj:121-126); compiled via the log-depth
-      path-doubling fixpoint.
+    * shorthand ``Rule("depends", "ns/field")`` — the transitive
+      closure of the namespace's id → ``field`` edges (NULL fields
+      dropped), the reference's commented example
+      (db/app_db.clj:121-126); head columns ``d1``, ``d2``.
     * general ``Rule("reach", head=("?a", "?b"), bodies=[...])`` —
       ``head`` lists the rule's variables; each body is a list of
       clauses (triples, predicates, or rule calls — including calls to
-      *itself*, possibly several times per body, i.e. nonlinear
-      recursion). A rule that is the transitive closure of its base —
-      ``R(a,m), R(m,b)``, or the linear ``E(a,m), R(m,b)`` /
-      ``R(a,m), E(m,b)`` — compiles to path doubling like the
-      shorthand. Otherwise non-recursive bodies seed the fixpoint;
-      recursive bodies are iterated to convergence with SEMI-NAIVE evaluation
-      (deltas substituted per self-call position) and per-round
-      lineage checkpoints — each round is one batch of joins, so a
-      depth-d graph needs ≤d driver rounds (≤⌈log₂ d⌉ for nonlinear
-      bodies, which square path length like doubling does).
+      *itself* or to partner rules, possibly several times per body,
+      i.e. nonlinear and mutual recursion).
+
+    A rule is evaluated with its strongly connected component of the
+    rule-call graph; a rule that calls no partner is a one-member
+    component. A lone rule that is the transitive closure of an edge
+    relation — the shorthand, ``R(a,m), R(m,b)``, or the linear
+    ``E(a,m), R(m,b)`` / ``R(a,m), E(m,b)`` — compiles to path
+    doubling: ⌈log₂ d⌉ rounds for a depth-d graph. Any other recursive
+    component runs SEMI-NAIVE evaluation: non-recursive bodies seed the
+    relations, recursive bodies are iterated to convergence with deltas
+    substituted per recursive-call position and a lineage checkpoint per
+    round. Each round is one batch of joins, so a depth-d graph needs
+    ≤d rounds (≤⌈log₂ d⌉ for nonlinear bodies, which square path length
+    like doubling does).
     """
 
     name: str
@@ -517,51 +522,13 @@ class DatalogDB:
     def _eval_rule(
         self, rule: Rule, rule_map: dict[str, "Rule"], rule_env: dict[str, DataFrame]
     ) -> DataFrame:
-        """Materialize a rule's derived relation (columns = head vars).
-
-        Shorthand rules (edge_attr) — and general rules recognized as
-        the transitive closure of their base (``_is_transitive_rule``,
-        ``_is_linear_closure_rule``) — compile to the log-depth
-        path-doubling closure. Other general rules run a SEMI-NAIVE fixpoint
-        (the standard Datalog evaluation): the union of non-recursive
-        bodies seeds relation and delta; each round derives only tuples
-        reachable *through the delta* — every recursive body is
-        re-evaluated once per self-call position with that position
-        bound to the delta and the others to the full relation (the
-        nonlinear semi-naive expansion), so derivation work per round
-        tracks |delta| · |rel|, not |rel|², which is what survives when
-        rel is cluster-scale. New tuples are isolated with an anti-join
-        (that IS the delta, so it can't be traded away); lineage is
-        truncated by per-round localCheckpoint; cycles terminate because
-        a revisited tuple never re-enters the delta."""
-        if rule.name in rule_env:
-            return rule_env[rule.name]
-        # Mutual recursion (r10, VERDICT #5): rules whose static call
-        # graph forms a >1-member strongly connected component are
-        # evaluated as ONE joint semi-naive fixpoint — iterate every
-        # member per round until no member's relation grows — because
-        # materializing one member in isolation would either recurse
-        # forever or cache a partner against a partial mid-fixpoint
-        # snapshot (the corruption class the r9 guard raised on).
-        scc = self._rule_scc(rule.name, rule_map)
-        if len(scc) > 1:
-            self._eval_mutual_scc(scc, rule_map, rule_env)
-            return rule_env[rule.name]
-
-        inflight: set = rule_env.setdefault("__in_flight__", set())  # type: ignore[assignment]
-        if rule.name in inflight:
-            # re-entry through a nested (e.g. or-branch) self-call that
-            # the top-level recursion classifier cannot route through
-            # the semi-naive delta — would recurse forever otherwise
-            raise ValueError(
-                f"rule {rule.name!r} calls itself from a nested clause "
-                "(or-branch); self-recursion must be a top-level body clause"
-            )
-        inflight.add(rule.name)
-        try:
-            return self._eval_rule_inner(rule, rule_map, rule_env)
-        finally:
-            inflight.discard(rule.name)
+        """Materialize a rule's derived relation (columns = head vars) by
+        evaluating the rule's whole component of the static rule-call
+        graph (:meth:`_eval_component`) — a rule that calls no partner
+        is a one-member component."""
+        if rule.name not in rule_env:
+            self._eval_component(self._rule_scc(rule.name, rule_map), rule_map, rule_env)
+        return rule_env[rule.name]
 
     @staticmethod
     def _rule_scc(name: str, rule_map: dict[str, "Rule"]) -> set:
@@ -590,23 +557,31 @@ class DatalogDB:
         fwd = reach(name)
         return {name} | {n for n in fwd if name in reach(n)}
 
-    def _eval_mutual_scc(
+    def _eval_component(
         self, scc: set, rule_map: dict[str, "Rule"], rule_env: dict[str, DataFrame]
     ) -> None:
-        """Joint semi-naive fixpoint over a mutually recursive rule
-        group (r10, VERDICT #5; the reference's rule surface is Crux
-        Datalog — app_db.clj:121-126 — which evaluates these).
+        """Evaluate one strongly connected component of the rule-call
+        graph into ``rule_env`` (the reference's rule surface is Crux
+        Datalog — app_db.clj:121-126 — which evaluates single,
+        self-recursive and mutually recursive rules alike).
 
-        Standard stratum-internal evaluation: every member keeps a
-        relation and a per-round DELTA; each round re-derives every
-        SCC-calling body once per SCC-call position with that position
-        bound to the callee's delta and the others to the full
-        relations (the nonlinear semi-naive expansion — work tracks
-        Σ|delta|·|rel|, not |rel|², the shape that survives at cluster
-        scale), anti-joins out known tuples, and the round's new tuples
-        become the next deltas for ALL members simultaneously
-        (synchronous rounds — asynchronous per-member updates would
-        make the result order-dependent). Convergence = no member grew.
+        A lone rule whose fixpoint is the transitive closure of an edge
+        relation (:meth:`_closure_edges`) compiles to the log-depth
+        path-doubling operator. A component with no recursive body
+        materializes its seeds and runs no round. Everything else runs
+        the SEMI-NAIVE fixpoint (standard stratum-internal evaluation,
+        VERDICT r10 #5): every member keeps a relation and a per-round
+        DELTA; each round re-derives every SCC-calling body once per
+        SCC-call position with that position bound to the callee's delta
+        and the others to the full relations (the nonlinear semi-naive
+        expansion — work tracks Σ|delta|·|rel|, not |rel|², the shape
+        that survives at cluster scale), anti-joins out known tuples
+        (that IS the delta, so it can't be traded away), and the round's
+        new tuples become the next deltas for ALL members simultaneously
+        (synchronous rounds — asynchronous per-member updates would make
+        the result order-dependent). Lineage is truncated by per-round
+        localCheckpoint; cycles terminate because a revisited tuple never
+        re-enters a delta. Convergence = no member grew.
 
         Members with no SCC-free body activate LATE: their relation
         first exists when a round derives it from the partners' seeds
@@ -619,50 +594,50 @@ class DatalogDB:
         the intermediary inside the SCC by definition).
         """
         members = [rule_map[n] for n in sorted(scc)]
-        heads: dict[str, list[str]] = {}
         for r in members:
-            if r.edge_attr is not None:
-                # unreachable via the static graph (shorthand rules call
-                # nothing) — guard against future Rule surface growth
-                raise ValueError(
-                    f"shorthand rule {r.name!r} cannot be mutually recursive"
-                )
             nested = set()
             for body in r.bodies:
                 nested |= _nested_rule_calls(body, scc)
             if nested:
+                # the delta rewriting reaches top-level calls only; a
+                # nested call would re-enter this component unboundedly
                 raise ValueError(
                     f"rule {r.name!r} calls {sorted(nested)} from a nested "
                     "clause (or-branch); recursive calls must be top-level "
                     "body clauses"
                 )
-            heads[r.name] = [_vcol(v) for v in r.head]
-
-        rels: dict[str, DataFrame] = {}
-        deltas: dict[str, DataFrame] = {}
-        counts: dict[str, int] = {}
-        for r in members:
-            base: DataFrame | None = None
-            for body in r.bodies:
-                if _called_names(body) & scc:
-                    continue
-                b = self._eval_clauses(list(body), {}, rule_map, rule_env).select(
-                    *heads[r.name]
+        if len(members) == 1:
+            edges = self._closure_edges(members[0], rule_map, rule_env)
+            if edges is not None:
+                rule_env[members[0].name] = transitive_closure(
+                    edges,
+                    *edges.columns,
+                    depth_bound=members[0].depth_bound,
+                    assume_distinct=True,  # _closure_edges deduplicates
                 )
-                base = b if base is None else base.unionByName(b)
-            if base is not None:
-                rel = base.dropDuplicates().localCheckpoint(eager=False)
-                rels[r.name] = rel
-                deltas[r.name] = rel
-                counts[r.name] = rel.count()
+                return
+
+        heads = {r.name: [_vcol(v) for v in r.head] for r in members}
+        rels: dict[str, DataFrame] = {}
+        for r in members:
+            seed = self._seed(r, scc, rule_map, rule_env)
+            if seed is not None:
+                rels[r.name] = seed
         if not rels:
             raise ValueError(
-                f"mutually recursive rules {sorted(scc)} need at least one "
-                "body that calls no member of the group (a seed)"
+                f"rules {sorted(scc)} need at least one body that calls "
+                "none of them (a seed)"
             )
+        if not any(_called_names(b) & scc for r in members for b in r.bodies):
+            rule_env.update(rels)  # non-recursive: the seeds are the relations
+            return
+        deltas: dict[str, DataFrame] = dict(rels)
+        counts: dict[str, int] = {n: rel.count() for n, rel in rels.items()}
 
         some_rel = next(iter(rels.values()))
-        factor = 2.0  # growth-tracked sizing (ops/recursive._doubling note)
+        factor = 2.0  # growth-tracked sizing (see transitive_closure)
+        # session from the relation when DatalogDB() was built without
+        # one (every other path derives sessions from registered frames)
         with adaptive_rounds(self.spark or some_rel.sparkSession) as rt:
             for _ in range(1, MAX_FIXPOINT_ROUNDS + 1):
                 total_before = sum(counts.values())
@@ -684,7 +659,7 @@ class DatalogDB:
                 # rule_env exposes. Updating rels mid-loop desynced the
                 # two — a later member's body would pass the `in rels`
                 # guard, miss rule_env, fall through _apply_rule_call →
-                # _eval_rule → _eval_mutual_scc and recurse unboundedly
+                # _eval_rule → _eval_component and recurse unboundedly
                 # (r10 review, verified live on a seedless member read
                 # at a full position of a two-call body).
                 new_deltas: dict[str, DataFrame] = {}
@@ -720,6 +695,9 @@ class DatalogDB:
                         )
                     else:
                         new = grown.dropDuplicates()
+                    # lift onto the loop session so the checkpoint+count
+                    # action plans under loop-sized confs without
+                    # touching the caller's session (adaptive_rounds)
                     new = rt.lift(new).localCheckpoint(eager=False)
                     n_new = new.count()
                     if n_new == 0:
@@ -743,9 +721,10 @@ class DatalogDB:
                     2.0, 2.0 * sum(counts.values()) / max(total_before, 1)
                 )
             else:
+                # a silently partial relation is a wrong answer, not a result
                 raise RuntimeError(
-                    f"mutually recursive rules {sorted(scc)} did not reach "
-                    f"fixpoint in {MAX_FIXPOINT_ROUNDS} rounds; raise "
+                    f"rules {sorted(scc)} did not reach fixpoint in "
+                    f"{MAX_FIXPOINT_ROUNDS} rounds; raise "
                     "dataworks_spark.docs.datalog.MAX_FIXPOINT_ROUNDS or "
                     "bound the rules"
                 )
@@ -786,202 +765,87 @@ class DatalogDB:
         for n in scc:
             rule_env.pop(f"{n}@delta", None)
 
-    def _eval_rule_inner(
-        self, rule: "Rule", rule_map: dict[str, "Rule"], rule_env: dict[str, DataFrame]
-    ) -> DataFrame:
-        if rule.edge_attr is not None:
-            ns, field = rule.edge_attr.split("/", 1)
-            df, id_col = self.table(ns)
-            edges = df.select(F.col(id_col).alias("src"), F.col(field).alias("dst")).dropna()
-            closure = transitive_closure(edges, "src", "dst", depth_bound=rule.depth_bound)
-            rel = closure.toDF("d1", "d2")  # canonical head column names
-            rule_env[rule.name] = rel
-            return rel
-
+    def _seed(
+        self,
+        rule: "Rule",
+        scc: set,
+        rule_map: dict[str, "Rule"],
+        rule_env: dict[str, DataFrame],
+    ) -> DataFrame | None:
+        """The deduplicated union of the rule's bodies that call no
+        member of ``scc``, or None if every body does. Its checkpoint is
+        non-eager: the first action on it (the fixpoint's seed count, or
+        the closure's seed) materializes it — one job instead of two."""
         head_vars = [_vcol(v) for v in rule.head]
         base: DataFrame | None = None
-        rec_bodies: list[list[tuple]] = []
         for body in rule.bodies:
-            if any(isinstance(c[0], str) and c[0] == rule.name for c in body):
-                rec_bodies.append(list(body))
+            if _called_names(body) & scc:
                 continue
             b = self._eval_clauses(list(body), {}, rule_map, rule_env).select(*head_vars)
             base = b if base is None else base.unionByName(b)
         if base is None:
-            raise ValueError(f"rule {rule.name} needs at least one non-recursive body")
-        # non-eager: for a transitive rule the closure's seed count
-        # materializes this in the same action; for semi-naive it's the
-        # round-0 tag's count — either way one job instead of two
-        rel = base.dropDuplicates().localCheckpoint(eager=False)
-        if not rec_bodies:
-            rule_env[rule.name] = rel
-            return rel
+            return None
+        return base.dropDuplicates().localCheckpoint(eager=False)
 
-        if self._is_transitive_rule(rule, rec_bodies) or self._is_linear_closure_rule(
-            rule, rec_bodies
-        ):
-            # Transitive-rule recognition: R(a,b) :- <base>; R(a,m),
-            # R(m,b) — and the linear forms R(a,b) :- E(a,m), R(m,b) /
-            # R(a,m), E(m,b) with E the base body — are exactly the
-            # transitive closure of the base relation, so compile to the
-            # log-depth path-doubling operator (1 join/round, ⌈log₂
-            # depth⌉ rounds) instead of the general semi-naive loop,
-            # which needs one round per unit of depth and re-builds each
-            # round's plan through the clause compiler. Classic Datalog
-            # engine optimization — semantics are identical (proved
-            # against the general path and DuckDB WITH RECURSIVE in
-            # tests).
-            closure = transitive_closure(
-                rel,
-                head_vars[0],
-                head_vars[1],
-                depth_bound=rule.depth_bound,
-                assume_distinct=True,  # rel is a checkpointed dropDuplicates
+    def _closure_edges(
+        self, rule: "Rule", rule_map: dict[str, "Rule"], rule_env: dict[str, DataFrame]
+    ) -> DataFrame | None:
+        """The duplicate-free edge relation whose transitive closure IS
+        the rule's relation, or None if the rule is not closure-shaped.
+        A closure compiles to the log-depth path-doubling operator (one
+        join per round, ⌈log₂ depth⌉ rounds) instead of the semi-naive
+        loop's one round per unit of depth — a classic Datalog engine
+        optimization with identical semantics (proved against the
+        general path and DuckDB WITH RECURSIVE in tests). The shapes:
+
+        * shorthand ``Rule(name, "ns/field")``: the edges are the
+          namespace's (id, field) pairs, NULL fields dropped, under the
+          canonical head columns ``d1``/``d2``;
+        * self-transitivity ``R(a,b) :- E…; R(a,m), R(m,b)``: the edges
+          are the union of the non-recursive bodies ``E…``;
+        * right-linear ``R(a,b) :- E(a,b); E(a,m), R(m,b)`` and
+          left-linear ``R(a,b) :- E(a,b); R(a,m), E(m,b)``: the
+          recursive body is the ONE base body with one head variable
+          renamed to ``m`` plus one self-call keeping the other. A second
+          base body would make the fixpoint E* ∘ (E ∪ E2), not a closure.
+
+        ``m`` is always a fresh variable (absent from the head, and from
+        the base body of a linear rule)."""
+        if rule.edge_attr is not None:
+            ns, field = rule.edge_attr.split("/", 1)
+            df, id_col = self.table(ns)
+            return (
+                df.select(F.col(id_col).alias("d1"), F.col(field).alias("d2"))
+                .dropna()
+                .dropDuplicates()
             )
-            rel = closure.select(*head_vars)
-            rule_env[rule.name] = rel
-            return rel
-
-        # ONE Spark job per fixpoint round (mirrors ops.recursive): the
-        # relation-so-far and the current delta live in a single
-        # round-tagged DataFrame, whose non-eager localCheckpoint is
-        # materialized BY the convergence count() — so each round is one
-        # action instead of the eager-checkpoint + isEmpty + second-
-        # checkpoint formulation's three. Convergence = the relation
-        # stopped growing (the anti-join guarantees the union only adds
-        # genuinely new tuples, so |rel| is strictly monotone).
-        #
-        # Round 0 (the base-relation dedup) materializes OUTSIDE
-        # adaptive_rounds: its size is the output of arbitrary clause
-        # joins — unknown until counted — so it keeps AQE's runtime
-        # sizing; the loop rounds run AQE-off under exact-count sizing
-        # (same split as ops.recursive._doubling's seed vs rounds).
-        tagged = rel.withColumn("__round", F.lit(0)).localCheckpoint(eager=False)
-        prev = tagged.count()
-        # session from the relation, not self.spark: DatalogDB() is
-        # constructible session-free (every other path derives sessions
-        # from the registered DataFrames) and this was the one spot
-        # that dereferenced the optional attribute (r9 review:
-        # AttributeError only on general recursive rules)
-        with adaptive_rounds(self.spark or rel.sparkSession) as rt:
-            return self._fixpoint(
-                rule, rule_map, rule_env, rec_bodies, head_vars, tagged, prev, rt
-            )
-
-    @staticmethod
-    def _is_transitive_rule(rule: "Rule", rec_bodies: list[list[tuple]]) -> bool:
-        """True iff the only recursive body is the self-transitivity
-        chain ``(R ?a ?m) (R ?m ?b)`` for head ``(?a ?b)`` with a fresh
-        middle variable — the shape whose fixpoint IS transitive
-        closure of the non-recursive base."""
-        if len(rec_bodies) != 1 or len(rule.head) != 2:
-            return False
-        body = rec_bodies[0]
-        if len(body) != 2:
-            return False
-        c1, c2 = body
-        if not (c1[0] == rule.name and c2[0] == rule.name):
-            return False
-        if len(c1) != 3 or len(c2) != 3:
-            return False
+        own = {rule.name}
+        recs = [list(b) for b in rule.bodies if _called_names(b) & own]
+        bases = [list(b) for b in rule.bodies if not _called_names(b) & own]
+        if len(rule.head) != 2 or len(recs) != 1 or not bases:
+            return None
         a, b = rule.head
-        mid = c1[2]
-        return (
-            c1[1] == a
-            and c2[1] == mid
-            and c2[2] == b
-            and _is_var(mid)
-            and mid not in rule.head
-        )
-
-    @staticmethod
-    def _is_linear_closure_rule(rule: "Rule", rec_bodies: list[list[tuple]]) -> bool:
-        """True iff the rule is a linear transitive closure of its one
-        base body ``E``, in either direction:
-
-        * right-linear ``R(a,b) :- E(a,b); R(a,b) :- E(a,m), R(m,b)``
-        * left-linear  ``R(a,b) :- E(a,b); R(a,b) :- R(a,m), E(m,b)``
-
-        i.e. the recursive body is the base body with ONE head variable
-        renamed to a fresh ``m`` (absent from the head and the base
-        body) plus exactly one self-call joining on ``m``. A second
-        base body would make the fixpoint E* ∘ (E ∪ E2), not a closure,
-        so exactly one base and one recursive body are required."""
-        if len(rec_bodies) != 1 or len(rule.head) != 2:
-            return False
-        bases = [
-            body for body in rule.bodies
-            if not any(isinstance(c[0], str) and c[0] == rule.name for c in body)
-        ]
-        if len(bases) != 1:
-            return False
-        a, b = rule.head
-        body = rec_bodies[0]
+        body = recs[0]
         calls = [i for i, c in enumerate(body) if c[0] == rule.name]
-        if len(calls) != 1 or len(body[calls[0]]) != 3:
-            return False
-        _, x, y = body[calls[0]]
-        rest = body[: calls[0]] + body[calls[0] + 1 :]
-        base = list(bases[0])
-        # (renamed head var, middle var, self-call keeps the other one)
-        for old, mid, keeps in ((b, x, y == b), (a, y, x == a)):
-            if (
-                keeps
-                and _is_var(mid)
-                and mid not in rule.head
-                and not _mentions(base, mid)
-                and rest == _rename(base, old, mid)
-            ):
-                return True
-        return False
+        if any(len(body[i]) != 3 for i in calls):
+            return None
 
-    def _fixpoint(
-        self, rule, rule_map, rule_env, rec_bodies, head_vars, tagged, prev, rt
-    ) -> DataFrame:
-        delta_name = f"{rule.name}@delta"
-        factor = 2.0  # growth-tracked sizing (ops/recursive._doubling note)
-        for rnd in range(1, MAX_FIXPOINT_ROUNDS + 1):
-            rt(int(prev * factor))
-            rule_env[rule.name] = tagged.drop("__round")
-            rule_env[delta_name] = tagged.filter(
-                F.col("__round") == rnd - 1
-            ).drop("__round")
-            grown: DataFrame | None = None
-            for body in rec_bodies:
-                # one evaluation per self-call position, that position
-                # rewritten to the delta sentinel
-                positions = [
-                    i
-                    for i, c in enumerate(body)
-                    if isinstance(c[0], str) and c[0] == rule.name
-                ]
-                for pos in positions:
-                    variant = list(body)
-                    variant[pos] = (delta_name, *body[pos][1:])
-                    g = self._eval_clauses(variant, {}, rule_map, rule_env).select(*head_vars)
-                    grown = g if grown is None else grown.unionByName(g)
-            new = (
-                grown.dropDuplicates()
-                .join(tagged, on=head_vars, how="left_anti")
-                .withColumn("__round", F.lit(rnd))
+        def fresh(m) -> bool:
+            return _is_var(m) and m not in rule.head
+
+        if len(calls) == 2 == len(body):
+            (_, x1, m1), (_, m2, y2) = body
+            closure = x1 == a and y2 == b and m1 == m2 and fresh(m1)
+        elif len(calls) == 1 and len(bases) == 1:
+            _, x, y = body[calls[0]]
+            rest = body[: calls[0]] + body[calls[0] + 1 :]
+            base = bases[0]
+            # (renamed head var, middle var, self-call keeps the other one)
+            closure = any(
+                keeps and fresh(mid) and not _mentions(base, mid)
+                and rest == _rename(base, old, mid)
+                for old, mid, keeps in ((b, x, y == b), (a, y, x == a))
             )
-            # lift the round's relation onto the loop session so its
-            # checkpoint+count action plans under loop-sized confs
-            # without touching the caller's session (adaptive_rounds)
-            tagged = rt.lift(rt.accumulate(tagged, new)).localCheckpoint(eager=False)
-            cur = tagged.count()
-            if cur == prev:
-                break
-            factor = max(2.0, 2.0 * cur / max(prev, 1))
-            prev = cur
         else:
-            # a silently partial relation is a wrong answer, not a result
-            raise RuntimeError(
-                f"rule {rule.name!r} did not reach fixpoint in "
-                f"{MAX_FIXPOINT_ROUNDS} rounds; raise "
-                "dataworks_spark.docs.datalog.MAX_FIXPOINT_ROUNDS or bound the rule"
-            )
-        rel = _lift(tagged.drop("__round"), self.spark)
-        rule_env[rule.name] = rel
-        rule_env.pop(delta_name, None)
-        return rel
+            closure = False
+        return self._seed(rule, own, rule_map, rule_env) if closure else None

@@ -1636,7 +1636,7 @@ def near_dup_clusters(
     the precondition the fixpoint session's conf is tuned for; the
     caller's session confs are never touched, and the RESULT is lifted
     back onto the caller's session so downstream actions plan under
-    the caller's confs, mirroring ops/recursive._doubling's exit."""
+    the caller's confs, mirroring ops/recursive.transitive_closure's exit."""
     from dataworks_spark.ops.recursive import _fixpoint_session, _lift
 
     caller = pairs.sparkSession

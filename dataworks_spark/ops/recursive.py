@@ -2,27 +2,28 @@
 
 The reference exposes recursive Datalog rules through Crux
 (`(depends d1 d2)` over stored-function dependency edges,
-db/app_db.clj:121-126). Spark has no recursive CTE, so closure is a
-driver-side fixpoint loop. Two strategies:
+db/app_db.clj:121-126). Spark has no distinct-union recursive CTE, so
+closure is a driver-side fixpoint loop, by path doubling / repeated
+squaring:
 
-  doubling (default) — path doubling / repeated squaring:
-      R ← R ∪ (R ∘ R)
-    reaches paths of length 2^k after k rounds, so a depth-d graph
-    needs ⌈log₂ d⌉ driver round-trips instead of d. Each round is one
-    self-join + anti-join + union. At 100 TB scale, driver round-trips
-    (scheduler barriers, lineage checkpoints) dominate over join work,
-    so log-depth wins decisively for deep graphs.
+    R ← R ∪ (R ∘ R)
 
-  semi_naive — classic frontier ⋈ edges per round; minimal per-round
-    join input, d rounds. Better when the closure is shallow but huge
-    (doubling's R∘R join quadratically exceeds frontier⋈edges).
+reaches paths of length 2^k after k rounds, so a depth-d graph needs
+⌈log₂ d⌉ driver round-trips instead of the d of a frontier ⋈ edges
+loop. Each round is one self-join + dedup + union. At 100 TB scale,
+driver round-trips (scheduler barriers, lineage checkpoints) dominate
+over join work, so log-depth wins decisively for deep graphs. (General
+semi-naive evaluation of Datalog rules lives in
+``docs.datalog.DatalogDB._eval_component``; it shares this module's
+per-round sizing, :func:`adaptive_rounds`.)
 
-Shared mechanics:
+Mechanics:
   - `localCheckpoint()` per round truncates lineage so the plan doesn't
     grow exponentially;
-  - cycle safety: the anti-join against the accumulated closure means a
-    revisited pair never re-enters the frontier (the reference ships
-    cycle detection for the same reason, utils/common.clj:461-484);
+  - cycle safety: the dedup against the accumulated closure means a
+    revisited pair never grows the relation, so convergence (no growth)
+    is reached on cyclic graphs too (the reference ships cycle
+    detection for the same reason, utils/common.clj:461-484);
   - `max_iterations` caps runaway recursion.
 """
 
@@ -32,56 +33,6 @@ import math
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def transitive_closure(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 50,
-    method: str = "doubling",
-    strict: bool = True,
-    depth_bound: int | None = None,
-    assume_distinct: bool = False,
-) -> DataFrame:
-    """All (src, dst) pairs connected by ≥1 edge-hops.
-
-    ``strict=True`` (default) raises ``RuntimeError`` if the fixpoint
-    has not converged after ``max_iterations`` rounds — a silently
-    partial closure is a wrong answer, not a result. Pass
-    ``strict=False`` only when a bounded-depth closure is the intended
-    semantics (e.g. "reachable within k·2^k hops").
-
-    ``depth_bound``: caller-known upper bound on the longest simple
-    path (e.g. ⌈log₂ max_key⌉ for a k→k/2 forest). Doubling then stops
-    after ⌈log₂ d/4⌉ measured rounds (the seed covers depth ≤4)
-    WITHOUT the final no-growth probe round — convergence is proved by
-    the bound instead of observed. The early cur==prev exit still
-    applies if the graph closes sooner.
-
-    ``assume_distinct``: the caller proves ``edges`` is already
-    duplicate-free (e.g. a checkpointed dropDuplicates output), so the
-    initial dedup shuffle is skipped."""
-    if method == "doubling":
-        return _doubling(edges, src, dst, max_iterations, strict, depth_bound, assume_distinct)
-    if method != "semi_naive":
-        # a typo ('Doubling', 'doublng') must not silently run the
-        # per-depth-barrier path and drop depth_bound (r9 review)
-        raise ValueError(f"unknown method {method!r}: 'doubling' or 'semi_naive'")
-    if depth_bound is not None:
-        raise ValueError(
-            "depth_bound is a doubling-path optimization; semi_naive ignores "
-            "it — pass method='doubling' (or drop the bound)"
-        )
-    return _semi_naive(edges, src, dst, max_iterations, strict, assume_distinct)
-
-
-def _nonconverged(method: str, rounds: int) -> RuntimeError:
-    return RuntimeError(
-        f"transitive_closure({method}) did not converge in {rounds} rounds; "
-        "raise max_iterations (or pass strict=False for a bounded-depth closure)"
-    )
 
 
 #: assumed bytes/row for sizing fixpoint shuffles (two longs + overhead).
@@ -205,15 +156,33 @@ def adaptive_rounds(spark):
         fs.conf.set("spark.sql.adaptive.enabled", orig_aqe)
 
 
-def _doubling(
+def transitive_closure(
     edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iterations: int,
-    strict: bool,
+    src: str = "src",
+    dst: str = "dst",
+    max_iterations: int = 50,
+    strict: bool = True,
     depth_bound: int | None = None,
     assume_distinct: bool = False,
 ) -> DataFrame:
+    """All (src, dst) pairs connected by ≥1 edge-hops, by path doubling.
+
+    ``strict=True`` (default) raises ``RuntimeError`` if the fixpoint
+    has not converged after ``max_iterations`` squaring rounds — a
+    silently partial closure is a wrong answer, not a result. Pass
+    ``strict=False`` only when a bounded-depth closure is the intended
+    semantics (e.g. "reachable within 4·2^k hops").
+
+    ``depth_bound``: caller-known upper bound on the longest simple
+    path (e.g. ⌈log₂ max_key⌉ for a k→k/2 forest). The loop then stops
+    after ⌈log₂ d/4⌉ measured rounds (the seed covers depth ≤4)
+    WITHOUT the final no-growth probe round — convergence is proved by
+    the bound instead of observed. The early cur==prev exit still
+    applies if the graph closes sooner.
+
+    ``assume_distinct``: the caller proves ``edges`` is already
+    duplicate-free (e.g. a checkpointed dropDuplicates output), so the
+    initial dedup shuffle is skipped."""
     # ONE Spark job per round: the non-eager localCheckpoint is
     # materialized BY the convergence count() — checkpoint + emptiness
     # probe fused into a single action (vs. the eager-checkpoint +
@@ -355,56 +324,8 @@ def _doubling(
             factor = max(2.0, 2.0 * cur / max(prev, 1))
             prev = cur
     if strict:
-        raise _nonconverged("doubling", max_iterations)
+        raise RuntimeError(
+            f"transitive_closure did not converge in {max_iterations} rounds; "
+            "raise max_iterations (or pass strict=False for a bounded-depth closure)"
+        )
     return _lift(closure, spark)
-
-
-def _semi_naive(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iterations: int,
-    strict: bool,
-    assume_distinct: bool = False,
-) -> DataFrame:
-    # Same one-job-per-round shape as _doubling, via a round-tag column:
-    # the closure-so-far and the current frontier live in ONE
-    # checkpointed DataFrame (frontier = rows tagged with the latest
-    # round), so each round is a single non-eager checkpoint
-    # materialized by the convergence count. The anti-join against the
-    # accumulated closure keeps rounds |frontier ⋈ E|, and guarantees a
-    # revisited pair never re-enters the frontier (cycle safety).
-    # round 0 (base dedup) materializes under session AQE: its size is
-    # unknown until counted, and an extra sizing count would re-execute
-    # the whole upstream edges plan; the loop rounds run under
-    # exact-count sizing (same split as _doubling's seed vs rounds)
-    caller = edges.sparkSession
-    tagged = edges.select(src, dst)
-    if not assume_distinct:
-        tagged = tagged.dropDuplicates()
-    tagged = tagged.withColumn("__round", F.lit(0)).localCheckpoint(eager=False)
-    prev = tagged.count()
-    with adaptive_rounds(caller) as rt:
-        factor = 2.0  # growth-tracked (see _doubling's note)
-        for rnd in range(1, max_iterations + 1):
-            rt(int(prev * factor))
-            base = tagged.filter(F.col("__round") == 0).drop("__round")
-            frontier = tagged.filter(F.col("__round") == rnd - 1).drop("__round")
-            grown = (
-                frontier.withColumnRenamed(dst, "__mid")
-                .join(base.withColumnRenamed(src, "__mid"), on="__mid")
-                .select(src, dst)
-                .dropDuplicates()
-            )
-            new = grown.join(tagged, on=[src, dst], how="left_anti").withColumn(
-                "__round", F.lit(rnd)
-            )
-            tagged = rt.lift(rt.accumulate(tagged, new)).localCheckpoint(eager=False)
-            cur = tagged.count()
-            if cur == prev:
-                return _lift(tagged.drop("__round"), caller)
-            factor = max(2.0, 2.0 * cur / max(prev, 1))
-            prev = cur
-    if strict:
-        raise _nonconverged("semi_naive", max_iterations)
-    return _lift(tagged.drop("__round"), caller)

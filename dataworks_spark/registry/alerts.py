@@ -142,8 +142,4 @@ class AlertScheduler:
                     .withColumn("claimed", F.lit(False))
                 )
                 self.ref.swap(lambda s: s.put(unclaim, valid_time=now))
-            # truncate lineage: each tick appends 2-3 put plans on top of
-            # the store; without compaction poll N re-evaluates every
-            # earlier poll's joins (the MERGE-job analog, store.compact)
-            self.ref.swap(lambda s: s.compact())
         return len(fired_ids)

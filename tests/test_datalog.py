@@ -232,10 +232,10 @@ def test_general_rule_nonlinear_recursion(db, spark):
 
 def test_general_rule_linear_recursion_not_tc_shortcut(db, spark):
     """LEFT-LINEAR recursive rule — reach(a,b) := edge(a,b) | reach(a,m)
-    ∧ edge(m,b). The self-transitivity recognizer does not fire (one
-    self-call), but the linear-closure recognizer does, so this runs on
-    the path-doubling closure; the general semi-naive fixpoint is
-    pinned by test_general_rule_linear_non_closure_semi_naive."""
+    ∧ edge(m,b). It is not the self-transitivity shape (one self-call),
+    but the closure recognizer catches it as a left-linear closure, so
+    this runs on the path-doubling closure; the general semi-naive
+    fixpoint is pinned by test_general_rule_linear_non_closure_semi_naive."""
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("x", "y")],
         "fid string, dep string",
@@ -253,34 +253,49 @@ def test_general_rule_linear_recursion_not_tc_shortcut(db, spark):
     assert sorted(r.t for r in out.collect()) == ["b", "c", "d", "e"]
 
 
-def test_transitive_recognizer_shape_gate():
-    """The recognizer fires ONLY on the exact self-transitivity chain."""
+def _closure_edges(spark, rule):
+    """The closure recognizer's answer for ``rule`` over a one-row
+    namespace ``e`` carrying every attribute the shape gates use."""
     from dataworks_spark.docs.datalog import DatalogDB
 
-    tc = [[("r", "?a", "?m"), ("r", "?m", "?b")]]
-    r = Rule("r", head=("?a", "?b"), bodies=[[("?a", "e/d", "?b")], tc[0]])
-    assert DatalogDB._is_transitive_rule(r, tc)
+    d = DatalogDB(spark)
+    d.register(
+        "e",
+        spark.createDataFrame(
+            [("n0", "n1", "n2", "fn", "n3")],
+            "id string, d string, other string, k string, x string",
+        ),
+        "id",
+    )
+    return d._closure_edges(rule, {rule.name: rule}, {})
+
+
+def test_transitive_recognizer_shape_gate(spark):
+    """The recognizer fires on the self-transitivity chain, and not when
+    its middle variable is a head variable."""
+    base = [("?a", "e/d", "?b")]
+
+    def fires(rec):
+        r = Rule("r", head=("?a", "?b"), bodies=[base, rec])
+        return _closure_edges(spark, r) is not None
+
+    assert fires([("r", "?a", "?m"), ("r", "?m", "?b")])
     # middle var appearing in the head → not plain closure
-    bad = [[("r", "?a", "?b"), ("r", "?b", "?b")]]
-    r2 = Rule("r", head=("?a", "?b"), bodies=[[("?a", "e/d", "?b")], bad[0]])
-    assert not DatalogDB._is_transitive_rule(r2, bad)
-    # linear recursion (one self-call) is not THIS shape — it has its
-    # own recognizer (test_linear_closure_recognizer_shape_gate)
-    lin = [[("r", "?a", "?m"), ("?m", "e/d", "?b")]]
-    r3 = Rule("r", head=("?a", "?b"), bodies=[[("?a", "e/d", "?b")], lin[0]])
-    assert not DatalogDB._is_transitive_rule(r3, lin)
+    assert not fires([("r", "?a", "?b"), ("r", "?b", "?b")])
+    # linear recursion (one self-call) is not this shape, but it is
+    # the left-linear closure of the base, so the recognizer fires too
+    # (test_linear_closure_recognizer_shape_gate has its near misses)
+    assert fires([("r", "?a", "?m"), ("?m", "e/d", "?b")])
 
 
-def test_linear_closure_recognizer_shape_gate():
-    """The linear-closure recognizer fires on the right- and left-linear
-    closure of the single base body, and on nothing else."""
-    from dataworks_spark.docs.datalog import DatalogDB
-
+def test_linear_closure_recognizer_shape_gate(spark):
+    """The recognizer fires on the right- and left-linear closure of
+    the single base body, and on nothing else."""
     base = [("?a", "e/d", "?b")]
 
     def fires(rec, bases=(base,)):
         r = Rule("r", head=("?a", "?b"), bodies=[*bases, rec])
-        return DatalogDB._is_linear_closure_rule(r, [list(rec)])
+        return _closure_edges(spark, r) is not None
 
     assert fires([("?a", "e/d", "?m"), ("r", "?m", "?b")])  # right-linear
     assert fires([("r", "?a", "?m"), ("?m", "e/d", "?b")])  # left-linear
@@ -330,6 +345,7 @@ def test_linear_closure_rules_match_semi_naive_on_cycles(spark, monkeypatch):
     general fixpoint is made to raise) and return exactly what the
     general semi-naive fixpoint returns for the same rule, over a graph
     with two cycles, a self-loop and a tail."""
+    from dataworks_spark.docs import datalog
     from dataworks_spark.docs.datalog import DatalogDB
 
     edges = [
@@ -356,10 +372,12 @@ def test_linear_closure_rules_match_semi_naive_on_cycles(spark, monkeypatch):
 
     for rec in bodies.values():
         with monkeypatch.context() as m:
-            m.setattr(DatalogDB, "_fixpoint", general_path_forbidden)
+            # the component driver's semi-naive rounds run inside
+            # adaptive_rounds; the doubling operator never reaches it
+            m.setattr(datalog, "adaptive_rounds", general_path_forbidden)
             doubled = run(rec)
         with monkeypatch.context() as m:
-            m.setattr(DatalogDB, "_is_linear_closure_rule", staticmethod(lambda *_: False))
+            m.setattr(DatalogDB, "_closure_edges", lambda *_: None)
             general = run(rec)
         assert doubled == general == want
 
@@ -367,10 +385,11 @@ def test_linear_closure_rules_match_semi_naive_on_cycles(spark, monkeypatch):
 def test_general_rule_linear_non_closure_semi_naive(spark, monkeypatch):
     """A linear rule that is NOT closure-shaped — reach from typed
     sources: reach(a,b) :- kind(a)=src ∧ dep(a,b); reach(a,m) ∧
-    dep(m,b) — runs the general semi-naive fixpoint over a 14-node
-    chain (13 rounds). Each round's relation is coalesced to the round's
-    partition target, so its partition count does not grow with the
-    rounds; the answer is the BFS closure from the typed sources."""
+    dep(m,b) — runs the semi-naive fixpoint as a one-member component
+    over a 14-node chain (13 rounds). Each round's relation is coalesced
+    to the round's partition target, so its partition count does not
+    grow with the rounds, and the query's Spark job count is pinned;
+    the answer is the BFS closure from the typed sources."""
     from dataworks_spark.docs.datalog import DatalogDB
     from dataworks_spark.ops.recursive import _FixpointRuntime
 
@@ -402,22 +421,24 @@ def test_general_rule_linear_non_closure_semi_naive(spark, monkeypatch):
         return out
 
     monkeypatch.setattr(_FixpointRuntime, "accumulate", spy)
-    out = d.q(find=["?a", "?b"], where=[("reach", "?a", "?b")], rules=[rule])
-    got = {(r.a, r.b) for r in out.collect()}
+    sc = spark.sparkContext
+    group = "test_general_rule_linear_non_closure_semi_naive"
+    sc.setJobGroup(group, "one-member component rule")
+    try:
+        out = d.q(find=["?a", "?b"], where=[("reach", "?a", "?b")], rules=[rule])
+        got = {(r.a, r.b) for r in out.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     want = {(s, t) for s, t in _bfs_pairs(chain) if kinds[s] == "src"}
     assert got == want
     assert len(parts) >= 10, parts  # one accumulate per fixpoint round
     assert all(p <= target for p, target in parts), parts
-
-    # the same bound holds in ops.recursive's semi-naive closure loop
-    from dataworks_spark.ops.recursive import transitive_closure
-
-    parts.clear()
-    edges = spark.createDataFrame(chain, "src string, dst string")
-    tc = transitive_closure(edges, "src", "dst", method="semi_naive")
-    assert {(r.src, r.dst) for r in tc.collect()} == _bfs_pairs(chain)
-    assert len(parts) >= 10, parts
-    assert all(p <= target for p, target in parts), parts
+    # 19 jobs (seed count, one per round, the collect) were measured
+    # when a lone rule still ran a loop of its own; the component
+    # driver must not add jobs
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 19, sorted(jobs)
 
 
 # ── r9 fourth-review regressions ─────────────────────────────────────
@@ -661,16 +682,27 @@ def test_mutual_recursion_nested_call_raises(spark):
         db.q(find=["?x", "?y"], where=[("ra", "?x", "?y")], rules=[ra, rb]).collect()
 
 
-def test_transitive_closure_validates_method_and_bound(spark):
+def test_single_rule_nested_self_call_raises(spark):
+    """A lone rule (a one-member component) that calls itself only
+    inside an or-branch cannot be delta-rewritten either; it must raise
+    instead of re-entering its own evaluation without bound."""
     import pytest
 
-    from dataworks_spark.ops.recursive import transitive_closure
+    from dataworks_spark.docs.datalog import DatalogDB, Rule
 
-    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
-    with pytest.raises(ValueError, match="unknown method"):
-        transitive_closure(edges, method="Doubling")
-    with pytest.raises(ValueError, match="doubling-path"):
-        transitive_closure(edges, method="semi_naive", depth_bound=8)
+    db = DatalogDB()
+    edges = spark.createDataFrame([("a", "b")], "id string, next string")
+    db.register("edge", edges, "id")
+    r = Rule(
+        name="r",
+        head=("?x", "?y"),
+        bodies=[
+            [("?x", "edge/next", "?y")],
+            [("or", ("r", "?x", "?y"), ("?x", "edge/next", "?y"))],
+        ],
+    )
+    with pytest.raises(ValueError, match="nested"):
+        db.q(find=["?x", "?y"], where=[("r", "?x", "?y")], rules=[r]).collect()
 
 
 def test_mutual_recursion_three_member_scc(spark):

@@ -2,9 +2,8 @@
 
 Random sparse digraphs — including cycles, self-loops, diamonds, and
 disconnected nodes — closed by a brute-force Python reachability
-interpreter; both distributed strategies (path-doubling and semi-naive)
-must produce the identical pair set. Protects the count-based
-convergence rewrite in ops/recursive.py.
+interpreter; the path-doubling closure must produce the identical pair
+set. Protects the count-based convergence rewrite in ops/recursive.py.
 """
 
 from __future__ import annotations
@@ -39,16 +38,12 @@ edges_strategy = st.lists(
 )
 
 
-@pytest.mark.parametrize("method", ["doubling", "semi_naive"])
 @given(edges=edges_strategy)
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
-def test_closure_matches_bruteforce(spark, method, edges):
+def test_closure_matches_bruteforce(spark, edges):
     df = spark.createDataFrame(edges, "src int, dst int")
-    got = {
-        (r.src, r.dst)
-        for r in transitive_closure(df, "src", "dst", method=method).collect()
-    }
-    assert got == _brute_closure(edges), f"method={method} edges={edges}"
+    got = {(r.src, r.dst) for r in transitive_closure(df, "src", "dst").collect()}
+    assert got == _brute_closure(edges), f"edges={edges}"
 
 
 def test_depth_bound_clamped_by_max_iterations_still_strict(spark):
@@ -91,14 +86,10 @@ def test_fixpoint_confs_isolated_from_caller_session(spark):
     }
     edges = [(i, i + 1) for i in range(20)]
     df = spark.createDataFrame(edges, "src int, dst int")
-    for method in ("doubling", "semi_naive"):
-        got = {
-            (r.src, r.dst)
-            for r in transitive_closure(df, "src", "dst", method=method).collect()
-        }
-        assert got == _brute_closure(edges)
-        after = {k: spark.conf.get(k) for k in before}
-        assert after == before, f"caller confs mutated by {method}: {after}"
+    got = {(r.src, r.dst) for r in transitive_closure(df, "src", "dst").collect()}
+    assert got == _brute_closure(edges)
+    after = {k: spark.conf.get(k) for k in before}
+    assert after == before, f"caller confs mutated: {after}"
     # the child session exists, is cached, and carries the loop confs
     fs = getattr(spark, "_dataworks_fixpoint_session", None)
     assert fs is not None and fs is not spark

@@ -51,18 +51,6 @@ def test_unbounded_doubling_closure_matches_duckdb(spark):
     assert got == _duck_pairs()
 
 
-def test_unbounded_semi_naive_closure_matches_duckdb(spark):
-    got = sorted(
-        map(
-            tuple,
-            transitive_closure(
-                _edges(spark), "src", "dst", method="semi_naive"
-            ).collect(),
-        )
-    )
-    assert got == _duck_pairs()
-
-
 def test_unbounded_nonlinear_rule_matches_duckdb(spark):
     """A general NONLINEAR rule (not the ``edge_attr`` shorthand) on the
     same unbounded edge set: reach(a,b) :- edge(a,b); reach(a,m),
@@ -85,7 +73,7 @@ def test_unbounded_nonlinear_rule_matches_duckdb(spark):
 
 def test_unbounded_linear_rule_general_fixpoint_matches_duckdb(spark):
     """A general LEFT-LINEAR rule on the same unbounded edge set:
-    reach(a,b) :- edge(a,b); reach(a,m), edge(m,b). The linear-closure
+    reach(a,b) :- edge(a,b); reach(a,m), edge(m,b). The closure
     recognizer routes it to path doubling; the general semi-naive
     fixpoint is covered by test_datalog's non-closure linear rule and
     its parity test over cyclic graphs."""
