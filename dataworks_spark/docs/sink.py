@@ -2,11 +2,13 @@
 §2 A5/J1): the rebuild of "collector → submit-tx → Crux" as
 Kafka/stream → foreachBatch → version-log append.
 
-Each micro-batch becomes one document-store transaction: rows are
-turned into (id, payload, valid_from=event-ts) versions and appended
-via :meth:`DocumentStore.put` mechanics — per-batch, so delivery is
-exactly-once relative to the checkpoint (an upgrade over the
-reference's at-least-once, I6). The reference's ``await-tx`` barrier
+Each micro-batch becomes one document-store transaction: one
+:meth:`DocumentStore.put_log` merge turns its rows into (id, payload,
+valid_from=event-ts) versions — per-batch, so delivery is exactly-once
+relative to the checkpoint (an upgrade over the reference's
+at-least-once, I6). The merge is idempotent by value, so an epoch
+replayed after a restart (when the in-memory epoch set is gone) adds
+nothing. The reference's ``await-tx`` barrier
 (J6, db/app_db.clj:106-108) is implicit: foreachBatch returns only
 after the write completes.
 """
@@ -131,8 +133,8 @@ class DocStoreSink:
             if isinstance(self._id_col, str) and self._id_col != "id"
             else []
         )
-        # ONE scan of the micro-batch source: the emptiness probe reads
-        # the checkpointed rows, not the source a second time
+        # ONE scan of the micro-batch source: the emptiness probe and
+        # put_log read the checkpointed rows, not the source again
         rows = batch_df.withColumn("id", idc).drop(*drop).localCheckpoint()
         if rows.isEmpty():
             return
@@ -153,8 +155,9 @@ class DocStoreSink:
                     "stamp rows the incremental compactor would never flush"
                 )
             # record the epoch only AFTER put_log/compact returned (still
-            # inside the swap lock): compact's checkpoint runs eagerly,
-            # and marking first would make a failed apply look applied —
+            # inside the swap lock): a store write runs inside its call
+            # (DocumentStore._evolved), so a failed write raises here, and
+            # marking first would make a failed apply look applied —
             # Spark's retry of the same epoch would hit the guard and the
             # batch's data would be silently dropped (ADVICE r2).
             new_s = s.put_log(rows, ts_col=self._ts_col)
@@ -174,7 +177,6 @@ class DocStoreSink:
                 self._durable_since = boundary
                 self._pending = 0
             else:
-                new_s = new_s.compact()
                 self._pending += 1
             self._applied_epochs.add(epoch_id)
             return new_s

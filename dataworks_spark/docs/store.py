@@ -21,9 +21,10 @@ the far-future sentinel (reference ``:never``, utils/time.clj:75).
 
 Scale design (100 TB): the physical table is partitioned by entity
 namespace and ``date(valid_from)`` so as-of reads prune partitions; the
-latest-view is a row_number window per id (one shuffle on id); writers
-are append-only (new version row + interval-close row), compacted by a
-periodic MERGE-style batch job — never in-place updates.
+latest-view is a row_number window per id (one shuffle on id); every
+write is one merge that shuffles only the batch and its ids' current
+versions, never the log, and the log is compacted by a periodic
+MERGE-style batch job — never in-place updates.
 """
 
 from __future__ import annotations
@@ -58,13 +59,33 @@ def _hash_safe(col: Column, dt) -> Column:
     return F.to_json(col) if _contains_map(dt) else col
 
 
+_LOG_META = ("valid_from", "valid_to", "tx_from", "tx_to", "deleted")
+
+
 def _payload_hash(df: DataFrame, payload_cols: list[str]) -> Column:
     """THE deterministic payload tiebreak — shared by version_log's
-    same-ts ordering and _apply_write's same-id-in-one-put dedup, which
-    are documented to mirror each other (max hash wins in both); one
-    definition so the two rules cannot drift (r10 review)."""
+    same-ts ordering and the write merge's (same rule: max hash wins),
+    which also compares it to recognize a replayed row; one definition
+    so the rules cannot drift (r10 review)."""
     return F.xxhash64(
         *[_hash_safe(F.col(c), df.schema[c].dataType) for c in payload_cols]
+    )
+
+
+def _ts_guard(ts_col: str) -> Column:
+    """NULL timestamps are rejected LOUDLY at execution: a NULL
+    valid_from makes the version invisible to every read (latest,
+    as_of, entity — all compare against valid_from) while the row stays
+    in the log — silent ingest data loss (r10 review, confirmed live via
+    the collector→sink path on a heartbeat missing its ts field). Same
+    assert_true idiom as pipeline._hash_bucket; NULL when the check
+    passes."""
+    return F.assert_true(
+        F.col(ts_col).isNotNull(),
+        F.lit(
+            f"version_log: NULL {ts_col} — the version would be invisible "
+            "to every read; fix or filter the event upstream"
+        ),
     )
 
 
@@ -95,20 +116,7 @@ def version_log(
     """
     idc = F.col(id_col) if isinstance(id_col, str) else id_col
     out = df.withColumn("id", idc)
-    # NULL timestamps are rejected LOUDLY at execution: a NULL
-    # valid_from makes the version invisible to every read (latest,
-    # as_of, entity — all compare against valid_from) while the row
-    # stays in the log — silent ingest data loss (r10 review, confirmed
-    # live via the collector→sink path on a heartbeat missing its ts
-    # field). Same assert_true idiom as pipeline._hash_bucket.
-    ts_guard = F.assert_true(
-        F.col(ts_col).isNotNull(),
-        F.lit(
-            f"version_log: NULL {ts_col} — the version would be invisible "
-            "to every read; fix or filter the event upstream"
-        ),
-    )
-    out = out.withColumn(ts_col, F.when(ts_guard.isNull(), F.col(ts_col)))
+    out = out.withColumn(ts_col, F.when(_ts_guard(ts_col).isNull(), F.col(ts_col)))
     payload_cols = [c for c in df.columns if c != ts_col]
     # xxhash64 rejects MapType (and any type containing one) by
     # default; a schemaless doc batch may legitimately carry map-typed
@@ -137,21 +145,6 @@ def _payload_type_conflicts(store_df: DataFrame, new_df: DataFrame) -> dict:
         for c in store_t.keys() & new_t.keys()
         if store_t[c] != new_t[c]
     }
-
-
-def _widen_union(store_df: DataFrame, retired: DataFrame, corrected: DataFrame, new: DataFrame) -> DataFrame:
-    """Schemaless merge of a write's three row sets (reference docs
-    define their own attributes, SURVEY §1.2): a batch may carry new
-    attributes (widen the store; old rows read NULL) or omit known
-    ones (NULL in the new rows); same-name attributes must keep their
-    type (explicit error, never a silent cross-type union)."""
-    conflicts = _payload_type_conflicts(store_df, new)
-    if conflicts:
-        raise ValueError(
-            "batch column types conflict with the store schema: "
-            + ", ".join(f"{c}: store={a} batch={b}" for c, (a, b) in sorted(conflicts.items()))
-        )
-    return retired.unionByName(corrected).unionByName(new, allowMissingColumns=True)
 
 
 def _visible(vt: Column, tt: Column | None = None) -> Column:
@@ -255,13 +248,15 @@ class DocumentStore:
     """Mutable document-store facade over a version-log DataFrame.
 
     Write ops mirror the reference transaction vocabulary (SURVEY §2 J):
-    ``put`` (J1/J2), ``match`` (J3), ``cas`` (J4), ``delete`` (J5).
-    Writes are **append-only**: a put appends the new version and closes
-    the previous version's validity interval by appending nothing —
-    visibility is computed from the *latest tx_from per (id, overlapping
-    interval)* at read time; a periodic :meth:`compact` rewrites closed
-    intervals physically (the MERGE analog). ``await-tx`` (J6) is a
-    no-op: Spark writes are synchronous.
+    ``put`` (J1/J2), ``match`` (J3), ``cas`` (J4), ``delete`` (J5), plus
+    the bulk ``put_log``. Every write is ONE merge (:meth:`put_log`): a put
+    is a batch at one timestamp, a delete a tombstone batch, match/cas a
+    semi-join and then a put. Writes are **append-only**: the merge
+    retires the version a write supersedes (tx_to = now, so the old
+    belief stays queryable at earlier tx coordinates, J7), re-asserts it
+    with shortened validity, and appends the new version; the rest of
+    the log passes through untouched. ``await-tx`` (J6) is a no-op:
+    Spark writes are synchronous.
 
     Each write materializes ONCE, inside the write call, into a local
     checkpoint: the returned store's ``versions`` is a single
@@ -273,8 +268,7 @@ class DocumentStore:
     holds them (failure, dynamic-allocation decommission) makes later
     reads of this in-process store fail, and each write's blocks stay
     pinned until the store object is garbage-collected. Durable state
-    comes from :meth:`compact` with a ``path`` (or
-    :meth:`compact_incremental`), or from
+    comes from :meth:`compact` (or :meth:`compact_incremental`), or from
     ``DocStoreSink(durable_path=...)``, which compacts every applied
     micro-batch to parquet and re-roots the store on the files.
     """
@@ -284,16 +278,38 @@ class DocumentStore:
         self._now = now_fn or _dt.datetime.utcnow
 
     def _evolved(self, versions: DataFrame) -> "DocumentStore":
-        """Successor store after one write: the write's plan is marked
-        ``localCheckpoint(eager=False)`` so the successor's version log
-        is ONE leaf. Every _apply_write / put_log references
-        ``self.versions`` in ~3 subtrees (retire, correct, next-version
-        lookup), so an unmaterialized n-write chain re-analyzes ~3^n
-        copies of the base plan at every later action. Under AQE the
-        non-eager checkpoint still executes the write's shuffle stages
-        inside this call, so each write's join tree runs exactly once:
-        no later read or write re-executes it."""
-        return DocumentStore(versions.localCheckpoint(eager=False), self._now)
+        """Successor store after one write, whose version log is ONE
+        leaf, and whose write has run inside this call, so a failing
+        write (a NULL-ts batch) raises here. Under AQE the leaf is marked
+        ``localCheckpoint(eager=False)``: building its RDD already runs
+        the write's shuffle stages, and the copy into the block manager
+        is paid by the first reader. Without AQE nothing would run until
+        that first read, so the checkpoint is taken eagerly.
+
+        The leaf is then re-rooted on the checkpoint's RDD with no
+        origin constraints. A checkpoint keeps the constraints Catalyst
+        inferred for the plan it replaced, and each write adds a
+        disjunct over ``deleted`` to them, so a chain of writes would
+        carry a predicate set that grows with every write into every
+        later plan (bounded in test_docs). The re-rooted leaf carries no
+        origin statistics either: the planner sizes it at its default
+        estimate, so it is never broadcast statically; AQE still
+        broadcasts it at runtime once a shuffle has measured it (tested
+        in test_docs). The re-root calls
+        ``SparkSession.internalCreateDataFrame`` and ``parseDataType``,
+        JVM methods that are ``private[sql]`` in Scala but public in
+        bytecode (PySpark itself calls ``parseDataType``); checked on
+        Spark 4.1 — a Spark upgrade must keep test_docs' leaf tests
+        green."""
+        spark = versions.sparkSession
+        aqe = spark.conf.get("spark.sql.adaptive.enabled", "false").lower() == "true"
+        ck = versions.localCheckpoint(eager=not aqe)
+        jdf = spark._jsparkSession.internalCreateDataFrame(
+            ck._jdf.queryExecution().toRdd(),
+            spark._jsparkSession.parseDataType(ck.schema.json()),
+            False,
+        )
+        return DocumentStore(DataFrame(jdf, spark), self._now)
 
     # -- reads ---------------------------------------------------------
     def as_of(self, valid_time, tx_time=None) -> DataFrame:
@@ -324,21 +340,28 @@ class DocumentStore:
     # -- writes --------------------------------------------------------
     def put(self, docs: DataFrame, valid_time: _dt.datetime | None = None) -> "DocumentStore":
         """Upsert new versions (J1); a future ``valid_time`` schedules
-        visibility (J2, demo-app-1.org:125-127). ``docs`` must carry an
-        ``id`` column plus payload columns matching the store schema."""
-        return self._apply_write(docs, valid_time, tombstone=False)
+        visibility (J2, demo-app-1.org:125-127). ``docs`` carries an
+        ``id`` column plus payload columns; new attributes widen the
+        store. A put is one :meth:`put_log` batch at one timestamp, so
+        two rows for one id in one put follow put_log's same-timestamp
+        rule: both rows are kept, the max payload-hash row holds the
+        interval and the other gets a zero-length ``[vt, vt)`` interval
+        that no read sees."""
+        vt = F.lit(valid_time or self._now()).cast("timestamp")
+        return self.put_log(docs.withColumn("__vt", vt), ts_col="__vt")
 
     def delete(self, ids: DataFrame, valid_time: _dt.datetime | None = None) -> "DocumentStore":
-        """Bitemporal delete (J5): append a tombstone version; the doc
-        vanishes from latest/as-of-after views but history remains."""
-        payload_cols = [
-            c for c in self.versions.columns
-            if c not in {"id", "valid_from", "valid_to", "tx_from", "tx_to", "deleted"}
-        ]
-        tomb = ids.select("id")
-        for c in payload_cols:
-            tomb = tomb.withColumn(c, F.lit(None).cast(self.versions.schema[c].dataType))
-        return self._apply_write(tomb, valid_time, tombstone=True)
+        """Bitemporal delete (J5): a tombstone batch at one timestamp;
+        the doc vanishes from latest/as-of-after views but history
+        remains."""
+        vt = F.lit(valid_time or self._now()).cast("timestamp")
+        tomb = ids.select("id", vt.alias("__vt"))
+        # typed NULL payload: the batch has the log's columns, so the
+        # schema-on-first-write probe in put_log never runs for a delete
+        for c in self.versions.columns:
+            if c not in ("id", *_LOG_META):
+                tomb = tomb.withColumn(c, F.lit(None).cast(self.versions.schema[c].dataType))
+        return self.put_log(tomb, ts_col="__vt", tombstone=True)
 
     def match_put(
         self,
@@ -366,229 +389,149 @@ class DocumentStore:
 
     cas = match_put  # J4 compare-and-set (utils/auth.clj:139-146) — same mechanics
 
-    # -- internals -----------------------------------------------------
-    def _apply_write(self, docs: DataFrame, valid_time, tombstone: bool) -> "DocumentStore":
-        """Bitemporal upsert of one version per id at valid-time ``vt``
-        (Crux put semantics, the MERGE analog expressed as joins so it
-        distributes):
-
-        1. the current version *covering* vt (valid_from <= vt <
-           valid_to, tx-current) is retired (tx_to = now — the old
-           belief stays queryable at earlier tx coordinates, J7) and
-           re-asserted with validity shortened to end at vt;
-        2. the new version's validity runs from vt to the *next* known
-           version's valid_from (a put earlier in valid-time than an
-           existing future-dated version must NOT override it —
-           property-tested against the brute-force interpreter);
-        3. versions entirely before or after vt are untouched.
-
-        Append-only rows keep the 100 TB write path a blind append +
-        periodic compaction, never an in-place update."""
-        now = self._now()
-        vt = valid_time or now
-        vtl = F.lit(vt).cast("timestamp")
-        nowl = F.lit(now).cast("timestamp")
-        # two rows for one id in a single put would create two identical
-        # current intervals whose latest-view winner depended on
-        # partition order — the nondeterminism class version_log's
-        # same-ts tiebreak closed in r9. Keep ONE row per id by the
-        # mirrored deterministic rule (max payload hash wins, matching
-        # version_log where the hash-ascending LAST event keeps the
-        # open interval). map payloads hash via to_json (_hash_safe).
-        payload_cols = [c for c in docs.columns if c != "id"]
-        if payload_cols:
-            w = Window.partitionBy("id").orderBy(
-                _payload_hash(docs, payload_cols).desc()
-            )
-            docs = (
-                docs.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        else:
-            docs = docs.dropDuplicates(["id"])
-        ids = docs.select("id").distinct()
-
-        marked = self.versions.join(
-            ids.withColumnRenamed("id", "__uid"),
-            on=F.col("id") == F.col("__uid"),
-            how="left",
-        )
-        covering = (
-            F.col("__uid").isNotNull()
-            & (F.col("tx_to") == F.lit(NEVER))
-            & (F.col("valid_from") <= vtl)
-            & (vtl < F.col("valid_to"))
-        )
-        retired = marked.withColumn(
-            "tx_to", F.when(covering, nowl).otherwise(F.col("tx_to"))
-        ).drop("__uid")
-        corrected = (
-            marked.filter(covering)
-            .withColumn("valid_to", vtl)
-            .withColumn("tx_from", nowl)
-            .withColumn("tx_to", F.lit(NEVER).cast("timestamp"))
-            .drop("__uid")
-        )
-
-        # the new version holds until the next future version, if any
-        next_vf = (
-            self.versions.filter(F.col("tx_to") == F.lit(NEVER))
-            .join(ids, on="id", how="left_semi")
-            .filter(F.col("valid_from") > vtl)
-            .groupBy("id")
-            .agg(F.min("valid_from").alias("__next_vf"))
-        )
-        new = (
-            docs.join(next_vf, on="id", how="left")
-            .withColumn("valid_from", vtl)
-            .withColumn("valid_to", F.coalesce(F.col("__next_vf"), F.lit(NEVER).cast("timestamp")))
-            .drop("__next_vf")
-            .withColumn("tx_from", nowl)
-            .withColumn("tx_to", F.lit(NEVER).cast("timestamp"))
-            .withColumn("deleted", F.lit(tombstone))
-        )
-        if (
-            set(new.columns) != set(self.versions.columns)
-            or _payload_type_conflicts(self.versions, new)
-        ) and self.versions.isEmpty():
-            # schema-on-first-write, mirroring put_log: a rowless store
-            # adopts the first batch's payload shape whether the
-            # declared schema differs in column SET or in a column's
-            # type — falling through to _widen_union would permanently
-            # carry the stale schema's columns as all-NULL. The cheap
-            # schema comparisons run first so the isEmpty job is only
-            # paid when a difference exists.
-            return self._evolved(new)
-        merged = _widen_union(self.versions, retired, corrected, new)
-        return self._evolved(merged)
-
-    def put_log(self, df: DataFrame, ts_col: str = "ts") -> "DocumentStore":
+    def put_log(self, df: DataFrame, ts_col: str = "ts", tombstone: bool = False) -> "DocumentStore":
         """Bulk-append an event-log batch: one version per row at its
         own timestamp (the streaming-ingest write shape, §3.2). ``df``
-        carries ``id`` + payload + ``ts_col``.
+        carries ``id`` + payload + ``ts_col``; ``tombstone`` writes every
+        row as a delete version.
 
-        Set-based, no per-timestamp loop, and semantically EQUIVALENT to
-        applying :meth:`put` once per event in timestamp order at this
-        one transaction time: intervals are computed within the batch by
-        one window pass; every tx-current version whose interval
-        contains a batch timestamp — the covering version AND any
-        future-scheduled (J2) version the batch straddles — is retired
-        (tx_to = now) and re-asserted closed at the earliest such
-        timestamp; every batch version is capped at the next known
-        version's valid_from (within batch or scheduled), so no two
-        current versions ever overlap (r9 ADVICE fix; previously a
-        batch straddling a scheduled version corrupted both)."""
+        Set-based and EQUIVALENT to applying the rows one at a time in
+        (timestamp, payload hash) order at this one transaction time:
+
+        1. every tx-current version whose interval contains a batch
+           timestamp — the covering version AND any future-scheduled
+           (J2) version the batch straddles — is retired (tx_to = now)
+           and re-asserted closed at the earliest such timestamp;
+        2. every batch version holds until the next batch timestamp of
+           its id or the next tx-current valid_from, whichever is first,
+           so no two current versions ever overlap (r9 ADVICE fix);
+        3. the rows of one id at one timestamp are dropped together when
+           their max-hash row (the one that would hold the interval)
+           equals the tx-current version holding that instant: same
+           deleted flag and payload hash, and a non-zero-length
+           interval. Applying them would leave every visible answer as
+           it is, so re-applying a batch is a no-op — the idempotence a
+           sink needs when a stream replays an epoch after a restart. A
+           zero-length version lost its instant to another write, so
+           writing it again applies (the later transaction wins).
+
+        Rows of one id at one timestamp chain by payload hash as in
+        :func:`version_log`: the max-hash row holds the interval.
+
+        Every store write is this one merge (the MERGE analog, expressed
+        so the log is scanned but never shuffled). The batch's ids are
+        broadcast and split the log in two: a conditioned semi-join
+        picks the batch ids' tx-current rows, and the matching anti-join
+        passes every other row through untouched. The broadcast assumes
+        a batch whose ids fit in driver and executor memory — the write
+        shapes here are a put, a delete or a streaming micro-batch; a
+        bulk load of a large log goes through :func:`version_log`
+        instead. Only the tx-current rows meet the batch, in one window
+        per id ordered by (valid_from, kind, hash) — stored rows (kind
+        0) sort before batch rows (kind 1) at an equal timestamp. From
+        that window: the first batch timestamp at or after a stored
+        row's valid_from (where the stored row is cut), the next batch
+        timestamp after a batch row, and the next stored valid_from
+        after it (the batch row ends at the earlier of the two)."""
         now = self._now()
         nowl = F.lit(now).cast("timestamp")
-        new = version_log(df, "id", ts_col).withColumn(
-            "tx_from", nowl
-        )
-        if (
-            set(new.columns) != set(self.versions.columns)
-            or _payload_type_conflicts(self.versions, new)
-        ) and self.versions.isEmpty():
+        never = F.lit(NEVER).cast("timestamp")
+        # the batch is read twice (its ids, its rows): unless it already
+        # is one materialized checkpoint (a sink's micro-batch), the
+        # checkpoint's first reader materializes it, so the source is
+        # scanned once and both readers see the same rows
+        leaf = df._jdf.queryExecution().analyzed()
+        if not (leaf.nodeName() == "LogicalRDD" and leaf.rdd().isCheckpointed()):
+            df = df.localCheckpoint(eager=False)
+        batch = df.withColumns({
+            "valid_from": F.when(_ts_guard(ts_col).isNull(), F.col(ts_col)),
+            "deleted": F.lit(tombstone),
+        })
+        if ts_col != "valid_from":
+            batch = batch.drop(ts_col)
+        log = self.versions
+        conflicts = _payload_type_conflicts(log, batch)
+        if (conflicts or set(batch.columns) | set(_LOG_META) != set(log.columns)) and log.isEmpty():
             # schema-on-first-write: a rowless store adopts the first
             # batch's payload shape (the reference is schemaless — docs
             # define their own attributes, SURVEY §1.2) whether the
             # declared schema differs in column SET or a column's type;
             # a non-empty store widens at the union below instead. The
             # cheap schema checks run first so the isEmpty job is paid
-            # only when a difference exists (mirrors _apply_write).
-            return self._evolved(new)
-        # Set-based equivalent of applying put() SEQUENTIALLY per batch
-        # event (all at this one tx time). The previous formulation only
-        # corrected the version covering the batch's FIRST timestamp and
-        # only capped the batch's LAST version at the next scheduled
-        # valid_from beyond __last_ts — so a batch straddling a
-        # future-scheduled version (scheduled T2, batch ts T1<T2 and
-        # T3>T2) left the T1 version overlapping [T2,T3) AND the
-        # scheduled version open alongside T3's: two current versions
-        # per id (r9 ADVICE medium). The general rules, applied to
-        # EVERY version / EVERY batch row:
-        #
-        # 1. every tx-current version whose validity interval contains
-        #    a batch timestamp is retired (tx_to = now) and re-asserted
-        #    with validity shortened to end at the EARLIEST such
-        #    timestamp — covering version and straddled scheduled
-        #    versions alike, one uniform predicate;
-        # 2. every batch version holds until min(next batch event for
-        #    the id [version_log's window], first tx-current valid_from
-        #    strictly after its own) — so no batch interval ever crosses
-        #    a scheduled version's start.
-        #
-        # Both are id-keyed joins of the version log against the batch —
-        # per-id fan-out is versions-per-id × batch-rows-per-id, and at
-        # 100 TB the id-partitioned layout co-locates them.
-        cur = self.versions.filter(F.col("tx_to") == F.lit(NEVER))
-        bts = df.select("id", F.col(ts_col).alias("__bts"))
-        corr_ts = (
-            cur.select("id", "valid_from", "valid_to")
-            .join(bts, on="id")
-            .filter(
-                (F.col("valid_from") <= F.col("__bts"))
-                & (F.col("__bts") < F.col("valid_to"))
+            # only when a difference exists.
+            log = batch.withColumns(
+                {"valid_to": never, "tx_from": never, "tx_to": never}
+            ).limit(0)
+            conflicts = {}
+        if conflicts:
+            raise ValueError(
+                "batch column types conflict with the store schema: "
+                + ", ".join(f"{c}: store={a} batch={b}" for c, (a, b) in sorted(conflicts.items()))
             )
-            .groupBy("id", "valid_from", "valid_to")
-            .agg(F.min("__bts").alias("__c_ts"))
+        ids = F.broadcast(batch.select(F.col("id").alias("__bid")))
+        current = (F.col("id") == F.col("__bid")) & (F.col("tx_to") == never)
+        untouched = log.join(ids, current, "left_anti")
+        rows = log.join(ids, current, "left_semi").withColumn("__kind", F.lit(0)).unionByName(
+            batch.withColumn("__kind", F.lit(1)), allowMissingColumns=True
         )
-        # (id, valid_from, valid_to) keys tx-current rows uniquely (two
-        # identical current intervals would already be corruption);
-        # retired ancestors sharing the key stay untouched via the
-        # tx_to == NEVER guard below
-        marked = self.versions.join(
-            corr_ts, on=["id", "valid_from", "valid_to"], how="left"
+        cols = [c for c in rows.columns if c != "__kind"]  # log's, then new
+        rows = rows.withColumn(
+            "__h", _payload_hash(rows, [c for c in cols if c not in _LOG_META])
         )
-        hit = F.col("__c_ts").isNotNull() & (F.col("tx_to") == F.lit(NEVER))
-        retired = marked.withColumn(
-            "tx_to", F.when(hit, nowl).otherwise(F.col("tx_to"))
-        ).drop("__c_ts")
-        corrected = (
-            marked.filter(hit)
-            .withColumn("valid_to", F.col("__c_ts"))
-            .withColumn("tx_from", nowl)
-            .withColumn("tx_to", F.lit(NEVER).cast("timestamp"))
-            .drop("__c_ts")
+        # (3) replay: per (id, valid_from), the batch's max hash against
+        # the hash of the non-zero-length tx-current row there. The frame
+        # is the rows at one valid_from of the same id partition as the
+        # merge window: a sort, not an exchange.
+        at = Window.partitionBy("id").orderBy("valid_from").rangeBetween(
+            Window.currentRow, Window.currentRow
         )
-        caps = (
-            new.select("id", "valid_from")
-            .join(
-                cur.select("id", F.col("valid_from").alias("__s_vf")), on="id"
-            )
-            .filter(F.col("__s_vf") > F.col("valid_from"))
-            .groupBy("id", "valid_from")
-            .agg(F.min("__s_vf").alias("__cap"))
+        live = (F.col("__kind") == 0) & (F.col("valid_from") < F.col("valid_to"))
+        rows = rows.withColumns({
+            "__top": F.max(F.when(F.col("__kind") == 1, F.col("__h"))).over(at),
+            "__held": F.max(F.when(live & (F.col("deleted") == tombstone), F.col("__h"))).over(at),
+        }).filter(
+            (F.col("__kind") == 0) | ~F.coalesce(F.col("__top") == F.col("__held"), F.lit(False))
         )
-        new = (
-            new.join(caps, on=["id", "valid_from"], how="left")
-            .withColumn(
-                "valid_to",
-                F.when(
-                    F.col("__cap") < F.col("valid_to"), F.col("__cap")
-                ).otherwise(F.col("valid_to")),
-            )
-            .drop("__cap")
+        w = Window.partitionBy("id").orderBy("valid_from", "__kind", "__h")
+        after = w.rowsBetween(1, Window.unboundedFollowing)
+        bts = F.when(F.col("__kind") == 1, F.col("valid_from"))
+        rows = rows.withColumns({
+            "__cut": F.min(bts).over(w.rowsBetween(Window.currentRow, Window.unboundedFollowing)),
+            "__next": F.least(
+                F.min(bts).over(after),
+                F.min(F.when(F.col("__kind") == 0, F.col("valid_from"))).over(after),
+            ),
+        })
+        # (1) a cut stored row is emitted twice: retired, and corrected
+        hit = (F.col("__kind") == 0) & (F.col("valid_to") > F.col("__cut"))
+        rows = rows.withColumn(
+            "__copy", F.explode(F.when(hit, F.array(F.lit(0), F.lit(1))).otherwise(F.array(F.lit(0))))
         )
-        merged = _widen_union(self.versions, retired, corrected, new)
-        return self._evolved(merged)
+        new = F.col("__kind") == 1
+        fixed = F.col("__copy") == 1
+        merged = rows.withColumns({
+            "valid_to": F.when(new, F.coalesce(F.col("__next"), never))
+            .when(fixed, F.col("__cut"))
+            .otherwise(F.col("valid_to")),
+            "tx_from": F.when(new | fixed, nowl).otherwise(F.col("tx_from")),
+            "tx_to": F.when(new | fixed, never).when(hit, nowl).otherwise(F.col("tx_to")),
+        }).select(*cols)
+        n = int(log.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        return self._evolved(
+            untouched.unionByName(merged, allowMissingColumns=True).coalesce(n)
+        )
 
-    def compact(self, path: str | None = None, spark=None) -> "DocumentStore":
-        """Rewrite the accumulated version log (the periodic MERGE/
-        rewrite job, SURVEY §4 #3).
-
-        With a ``path``, the compaction is DURABLE and executed: the log
-        is rewritten to parquet partitioned by (namespace,
-        date(valid_from)) — the 100 TB layout — and the returned store
-        reads from the rewritten files (lineage truncated to a scan).
-        For the append/streaming workload prefer
+    def compact(self, path: str, spark=None) -> "DocumentStore":
+        """Durable rewrite of the accumulated version log (the periodic
+        MERGE/rewrite job, SURVEY §4 #3): the log is rewritten to parquet
+        partitioned by (namespace, date(valid_from)) — the 100 TB layout
+        — and the returned store reads from the rewritten files (lineage
+        truncated to a scan). For the append/streaming workload prefer
         :meth:`compact_incremental`, which rewrites only the partitions
         the delta touched (IO proportional to the batch, not the
         corpus). With Delta/Iceberg jars both become row-level MERGE
         with snapshot isolation; without them (this image) these are
-        the honest executable forms. Without a path, falls back to an
-        in-process localCheckpoint."""
-        if path is None:
-            return DocumentStore(self.versions.localCheckpoint(), self._now)
+        the honest executable forms."""
         spark = spark or self.versions.sparkSession
         self.save(path)
         return DocumentStore.load(spark, path, self._now)

@@ -438,7 +438,7 @@ def test_put_same_id_twice_in_one_batch_deterministic(spark):
     identical current intervals whose latest-view winner depended on
     partition order. The survivor is now a function of the data (max
     payload hash — version_log's mirrored tiebreak), layout-invariant,
-    and exactly ONE current version exists."""
+    and exactly ONE visible current version exists."""
     outs = set()
     for parts in (1, 7):
         s, clock = _store(spark, [("u/1", "v0")], T0)
@@ -450,6 +450,10 @@ def test_put_same_id_twice_in_one_batch_deterministic(spark):
         latest = s2.latest().collect()
         assert len(latest) == 1
         outs.add(latest[0].body)
+        # put follows put_log's same-timestamp rule: the losing row is
+        # kept with a zero-length interval
+        zero = s2.versions.filter((F.col("valid_from") == T1) & (F.col("valid_to") == T1))
+        assert [r.body for r in zero.collect()] == [b for b in "ab" if b != latest[0].body]
     assert len(outs) == 1, f"survivor depended on layout: {outs}"
 
 
@@ -544,3 +548,220 @@ def test_each_write_leaves_one_checkpointed_leaf(spark, op):
         "match_put": {"a": "m0", "b": "m1"},
     }[op]
     assert latest == want
+
+
+def test_put_log_replay_is_a_noop_by_value(spark):
+    """A batch row equal to a tx-current version (id, valid_from,
+    deleted flag, payload hash) adds nothing and retires nothing, so
+    re-applying a put_log batch or a delete leaves the log as it was;
+    a new row in a partly replayed batch still applies."""
+    s, clock = _store(spark, [("a", "x"), ("b", "y")], T0)
+    clock["now"] = T1
+    batch = spark.createDataFrame(
+        [("a", "x1", T1), ("b", "y1", T1), ("b", "y2", T2)], "id string, body string, ts timestamp"
+    )
+    s1 = s.put_log(batch)
+    cols = ["id", "body", "valid_from", "valid_to", "tx_from", "tx_to", "deleted"]
+
+    def rows(store):
+        return sorted(map(repr, store.versions.select(cols).collect()))
+
+    before = rows(s1)
+    clock["now"] = T2
+    s2 = s1.put_log(batch)
+    assert rows(s2) == before
+    gone = spark.createDataFrame([("a",)], "id string")
+    s3 = s2.delete(gone, valid_time=T3)
+    after_delete = rows(s3)
+    clock["now"] = T3
+    assert rows(s3.delete(gone, valid_time=T3)) == after_delete
+    partly = spark.createDataFrame(
+        [("b", "y2", T2), ("b", "y3", T3)], "id string, body string, ts timestamp"
+    )
+    s4 = s3.put_log(partly)
+    assert [(r.id, r.body) for r in s4.as_of(T3).collect()] == [("b", "y3")]
+    assert sorted((r.id, r.body) for r in s4.as_of(T2).collect()) == [("a", "x1"), ("b", "y2")]
+    # one new row, one cut of y2's open interval (retired + corrected)
+    assert s4.versions.count() == len(after_delete) + 2
+
+
+def _merge_plan(spark, monkeypatch, write):
+    """Executed plan of the relation one write hands to the checkpoint."""
+    seen = []
+    evolved = DocumentStore._evolved
+
+    def spy(self, versions):
+        seen.append(versions)
+        return evolved(self, versions)
+
+    monkeypatch.setattr(DocumentStore, "_evolved", spy)
+    write().versions.count()
+    return seen[-1]._jdf.queryExecution().executedPlan().toString()
+
+
+def _shuffles_over_log_scan(plan: str) -> list[str]:
+    """Shuffle exchanges whose input is the version-log scan itself,
+    reached through nothing but projections and filters."""
+    import re
+
+    lines = plan.splitlines()
+    bad = []
+    for i, line in enumerate(lines):
+        if not re.search(r"\bExchange (hash|range|RoundRobin|Single)", line):
+            continue
+        for nxt in lines[i + 1:]:
+            op = re.sub(r"^[\s:+|-]*(\*\(\d+\) )?", "", nxt)
+            if op.startswith(("Project", "Filter", "ColumnarToRow", "InputAdapter")):
+                continue
+            if op.startswith("Scan ExistingRDD") and "valid_to" in op:
+                bad.append(line.strip())
+            break
+    return bad
+
+
+@pytest.mark.parametrize("op", ["put_log", "delete"])
+def test_write_never_shuffles_the_version_log(spark, monkeypatch, op):
+    """The merge splits the log with a broadcast of the batch ids: the
+    log is scanned, never exchanged. Only the batch ids' tx-current
+    rows meet the batch in the one id-window. A put_log runs two Spark
+    jobs (the id broadcast and the window's shuffle) and its count two
+    more (measured on a warm session)."""
+    s, clock = _store(spark, [(f"u/{i}", "v") for i in range(40)], T0)
+    clock["now"] = T1
+    s = s.put(spark.createDataFrame([("u/0", "w")], "id string, body string"))
+    s.versions.count()
+    clock["now"] = T2
+    if op == "put_log":
+        batch = spark.createDataFrame(
+            [("u/1", "b1", T2), ("u/2", "b2", T1), ("u/2", "b3", T3)],
+            "id string, body string, ts timestamp",
+        )
+        write = lambda: s.put_log(batch)  # noqa: E731
+    else:
+        gone = spark.createDataFrame([("u/1",), ("u/3",)], "id string")
+        write = lambda: s.delete(gone)  # noqa: E731
+    plan = _merge_plan(spark, monkeypatch, write)
+    assert "Scan ExistingRDD" in plan and "BroadcastHashJoin" in plan, plan
+    assert not _shuffles_over_log_scan(plan), plan
+    if op == "put_log":
+        sc = spark.sparkContext
+
+        def jobs(group, fn):
+            sc.setJobGroup(group, group)
+            try:
+                out = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+        out, write_jobs = jobs("put_log_pin_write", lambda: s.put_log(batch))
+        _, count_jobs = jobs("put_log_pin_count", out.versions.count)
+        assert write_jobs <= 2 and count_jobs <= 2, (write_jobs, count_jobs)
+
+
+def test_write_chain_leaf_stays_bounded(spark):
+    """Over a chain of mixed writes the store's leaf carries no growing
+    Catalyst constraints (a checkpoint keeps the constraints of the plan
+    it replaced, and each write added a disjunct over ``deleted``) and
+    no growing partition count (the pass-through rows keep the leaf's
+    partitions, the window adds its own)."""
+    s, clock = _store(spark, [(f"u/{i}", "v") for i in range(20)], T0)
+    limit = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def constraints(store):
+        return len(store.versions._jdf.queryExecution().optimizedPlan().constraints().toString())
+
+    first = None
+    for k in range(30):
+        clock["now"] = T0 + dt.timedelta(hours=k + 1)
+        i = f"u/{k % 20}"
+        if k % 3 == 0:
+            s = s.put_log(spark.createDataFrame(
+                [(i, f"l{k}", clock["now"])], "id string, body string, ts timestamp"
+            ))
+        elif k % 3 == 1:
+            s = s.delete(spark.createDataFrame([(i,)], "id string"))
+        else:
+            s = s.put(spark.createDataFrame([(i, f"p{k}")], "id string, body string"))
+        first = constraints(s) if first is None else first
+        assert s.versions.rdd.getNumPartitions() <= limit, k
+    assert constraints(s) <= first
+    # ids deleted last: u/10, u/13, u/16, u/19 (first pass), u/2, u/5, u/8
+    assert s.latest().count() == 20 - 7
+
+
+def _by_hash(spark, bodies, doc_id="a"):
+    """``bodies`` of one document sorted by the merge's payload hash
+    (over the log's non-interval columns, id then body): the last one
+    wins a same-timestamp tie."""
+    df = spark.createDataFrame([(doc_id, b) for b in bodies], "id string, body string")
+    return [r.body for r in df.orderBy(F.xxhash64("id", "body")).collect()]
+
+
+def test_reput_of_a_tie_loser_at_the_same_valid_time_wins(spark):
+    """A version that lost its instant to a same-timestamp row keeps a
+    zero-length interval. Writing it again at that valid time is a new
+    transaction, not a replay: it must win, as the later transaction
+    wins in the brute-force model."""
+    lo, hi = _by_hash(spark, ["x", "w"])
+    s, clock = _store(spark, [("a", "v0")], T0)
+    clock["now"] = T1
+    s = s.put_log(spark.createDataFrame(
+        [("a", lo, T1), ("a", hi, T1)], "id string, body string, ts timestamp"
+    ))
+    assert [r.body for r in s.as_of(T1).collect()] == [hi]
+    clock["now"] = T2
+    s = s.put(spark.createDataFrame([("a", lo)], "id string, body string"), valid_time=T1)
+    assert [r.body for r in s.as_of(T1).collect()] == [lo]
+    assert [r.body for r in s.latest().collect()] == [lo]
+
+
+def test_reclaim_at_the_same_now_applies(spark):
+    """The alert scheduler's retry path: claim at ``now``, unclaim at
+    the same ``now`` (a failed handler), then claim again at that
+    ``now`` on the next poll. The re-claim equals the zero-length
+    corrected claim row, but it must apply: the alert is claimed while
+    its handler runs."""
+    s, clock = _store(spark, [("alert/1", "free")], T0)
+    clock["now"] = T1
+    for body in ("claimed", "free", "claimed"):
+        s = s.put(spark.createDataFrame([("alert/1", body)], "id string, body string"), valid_time=T1)
+        assert [r.body for r in s.as_of(T1).collect()] == [body]
+        assert [r.body for r in s.latest().collect()] == [body]
+
+
+def test_partial_replay_with_a_new_row_at_the_replayed_timestamp(spark):
+    """A batch that replays ``x@T1`` and adds ``y@T1`` is applied in
+    (timestamp, hash) order: x still wins when y's hash is lower, y wins
+    when it is higher. Re-applying a batch with both rows is a no-op."""
+    lo, mid, hi = _by_hash(spark, ["x", "y", "z"])
+    schema = "id string, body string, ts timestamp"
+    for new, winner in ((lo, mid), (hi, hi)):
+        s, clock = _store(spark, [("a", "v0")], T0)
+        clock["now"] = T1
+        s = s.put_log(spark.createDataFrame([("a", mid, T1)], schema))
+        clock["now"] = T2
+        s = s.put_log(spark.createDataFrame([("a", mid, T1), ("a", new, T1)], schema))
+        assert [r.body for r in s.as_of(T1).collect()] == [winner], new
+    both = spark.createDataFrame([("a", lo, T1), ("a", hi, T1)], schema)
+    s, clock = _store(spark, [("a", "v0")], T0)
+    clock["now"] = T1
+    s = s.put_log(both)
+    before = sorted(map(repr, s.versions.collect()))
+    clock["now"] = T2
+    assert sorted(map(repr, s.put_log(both).versions.collect())) == before
+
+
+def test_leaf_without_statistics_still_broadcasts(spark):
+    """The write leaf carries no origin statistics, so the planner never
+    broadcasts it statically; AQE measures it at the shuffle and still
+    turns a join of two small stores into a broadcast join."""
+    a, clock = _store(spark, [(f"u/{i}", "v") for i in range(20)], T0)
+    clock["now"] = T1
+    a = a.put(spark.createDataFrame([("u/1", "w")], "id string, body string"))
+    b = a.delete(spark.createDataFrame([("u/2",)], "id string"))
+    j = a.versions.join(b.versions.select("id", F.col("body").alias("b2")), "id")
+    assert len(j.collect()) > 0
+    final = j._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in final, final

@@ -332,6 +332,40 @@ def test_docstore_sink_idempotent_per_epoch(spark):
     assert {r.value for r in sink.store.latest().collect()} == {2.0}
 
 
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_docstore_sink_failed_write_leaves_epoch_unapplied(spark, aqe):
+    """A batch whose write fails (a NULL event timestamp) raises inside
+    foreach_batch, with or without AQE, and leaves its epoch unmarked
+    and the store unchanged: Spark's retry of the epoch with good data
+    applies instead of hitting the replay guard."""
+    import datetime as dt
+
+    from dataworks_spark.docs.sink import DocStoreSink
+    from dataworks_spark.docs.store import DocumentStore
+
+    empty = spark.createDataFrame(
+        [],
+        "id string, value double, valid_from timestamp, valid_to timestamp, "
+        "tx_from timestamp, tx_to timestamp, deleted boolean",
+    )
+    sink = DocStoreSink(DocumentStore(empty), id_col="k", ts_col="ts")
+    schema = "k string, value double, ts timestamp"
+    bad = spark.createDataFrame([("a", 1.0, None)], schema)
+    good = spark.createDataFrame([("a", 1.0, dt.datetime(2024, 1, 1))], schema)
+    before = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        with pytest.raises(Exception, match="NULL ts"):
+            sink.foreach_batch(bad, epoch_id=3)
+        assert sink.batches_applied == 0
+        assert sink.store.versions.count() == 0
+        sink.foreach_batch(good, epoch_id=3)  # the retry of the epoch
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", before)
+    assert sink.batches_applied == 1
+    assert {r.value for r in sink.store.latest().collect()} == {1.0}
+
+
 def test_docstore_sink_empty_batch_applies_nothing(spark):
     """An empty micro-batch writes no version and is NOT recorded as
     applied: the emptiness probe reads the batch's checkpointed rows
@@ -490,6 +524,45 @@ def test_docstore_sink_restart_recovers_durable_state(spark, tmp_path):
 
     durable = DocumentStore.load(spark, path)
     assert {r.value for r in durable.latest().collect()} == {1.0, 2.0}
+
+
+def test_docstore_sink_restart_replay_is_a_noop(spark, tmp_path):
+    """Spark replays an epoch whose commit a crash interrupted, and a
+    restarted sink has lost its in-memory epoch set. The replay must
+    leave the durable store as if the epoch had been applied once: the
+    merge recognizes each replayed row as equal to its tx-current
+    version and adds nothing (no zero-length corrections either)."""
+    import datetime as dt
+
+    from dataworks_spark.docs.sink import DocStoreSink
+    from dataworks_spark.docs.store import DocumentStore
+    from dataworks_spark.functions.timeops import NEVER
+
+    path = str(tmp_path / "durable")
+    empty_schema = (
+        "id string, value double, valid_from timestamp, valid_to timestamp, "
+        "tx_from timestamp, tx_to timestamp, deleted boolean"
+    )
+
+    def sink():
+        return DocStoreSink(
+            DocumentStore(spark.createDataFrame([], empty_schema)),
+            id_col="k",
+            ts_col="ts",
+            durable_path=path,
+        )
+
+    batch = spark.createDataFrame(
+        [("app/a", 1.0, dt.datetime(2024, 1, 1)), ("app/b", 2.0, dt.datetime(2024, 1, 2))],
+        "k string, value double, ts timestamp",
+    )
+    sink().foreach_batch(batch, epoch_id=5)
+    restarted = sink()
+    restarted.foreach_batch(batch, epoch_id=5)  # the replay after the restart
+    for versions in (restarted.store.versions, DocumentStore.load(spark, path).versions):
+        assert versions.filter(F.col("tx_to") == F.lit(NEVER)).count() == 2
+        assert versions.count() == 2
+    assert {r.value for r in restarted.store.latest().collect()} == {1.0, 2.0}
 
 
 def test_dedup_stream_within_watermark(spark, tmp_path):
