@@ -41,7 +41,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dataworks_spark.ops.recursive import _lift, adaptive_rounds, transitive_closure
+from dataworks_spark.ops.recursive import _FixpointRuntime, _lift, transitive_closure
 
 #: semi-naive fixpoint round cap for general recursive rules. Exhausting
 #: it RAISES (ADVICE r2: a silent partial relation is a wrong answer);
@@ -634,104 +634,99 @@ class DatalogDB:
         deltas: dict[str, DataFrame] = dict(rels)
         counts: dict[str, int] = {n: rel.count() for n, rel in rels.items()}
 
-        some_rel = next(iter(rels.values()))
-        factor = 2.0  # growth-tracked sizing (see transitive_closure)
         # session from the relation when DatalogDB() was built without
         # one (every other path derives sessions from registered frames)
-        with adaptive_rounds(self.spark or some_rel.sparkSession) as rt:
-            for _ in range(1, MAX_FIXPOINT_ROUNDS + 1):
-                total_before = sum(counts.values())
-                rt(int(total_before * factor))
-                # expose this round's relations + deltas to the clause
-                # compiler under the member names / delta sentinels (a
-                # member may have a relation but no delta this round —
-                # pop its stale sentinel rather than index into deltas)
-                for n in rels:
-                    rule_env[n] = rels[n]
-                for r in members:
-                    if r.name in deltas:
-                        rule_env[f"{r.name}@delta"] = deltas[r.name]
-                    else:
-                        rule_env.pop(f"{r.name}@delta", None)
-                # relation updates are DEFERRED to the end of the round
-                # (synchronous semantics): every member derives against
-                # the round-START rels/deltas, which are exactly what
-                # rule_env exposes. Updating rels mid-loop desynced the
-                # two — a later member's body would pass the `in rels`
-                # guard, miss rule_env, fall through _apply_rule_call →
-                # _eval_rule → _eval_component and recurse unboundedly
-                # (r10 review, verified live on a seedless member read
-                # at a full position of a two-call body).
-                new_deltas: dict[str, DataFrame] = {}
-                next_rels = dict(rels)
-                grew = False
-                for r in members:
-                    grown: DataFrame | None = None
-                    for body in r.bodies:
-                        positions = [
-                            i
-                            for i, c in enumerate(body)
-                            if isinstance(c[0], str) and c[0] in scc
-                        ]
-                        if not positions:
-                            continue  # seed body — contributed once
-                        if any(body[i][0] not in rels for i in positions):
-                            continue  # a callee not yet activated
-                        for pos in positions:
-                            callee = body[pos][0]
-                            if callee not in deltas:
-                                continue  # no delta this round
-                            variant = list(body)
-                            variant[pos] = (f"{callee}@delta", *body[pos][1:])
-                            g = self._eval_clauses(
-                                variant, {}, rule_map, rule_env
-                            ).select(*heads[r.name])
-                            grown = g if grown is None else grown.unionByName(g)
-                    if grown is None:
-                        continue
-                    if r.name in rels:
-                        new = grown.dropDuplicates().join(
-                            rels[r.name], on=heads[r.name], how="left_anti"
-                        )
-                    else:
-                        new = grown.dropDuplicates()
-                    # lift onto the loop session so the checkpoint+count
-                    # action plans under loop-sized confs without
-                    # touching the caller's session (adaptive_rounds)
-                    new = rt.lift(new).localCheckpoint(eager=False)
-                    n_new = new.count()
-                    if n_new == 0:
-                        continue
-                    grew = True
-                    new_deltas[r.name] = new
-                    if r.name in rels:
-                        next_rels[r.name] = (
-                            rt.lift(rt.accumulate(rels[r.name], new))
-                            .localCheckpoint(eager=False)
-                        )
-                        counts[r.name] += n_new
-                    else:
-                        next_rels[r.name] = new  # late activation
-                        counts[r.name] = n_new
-                rels = next_rels
-                deltas = new_deltas
-                if not grew:
-                    break
-                factor = max(
-                    2.0, 2.0 * sum(counts.values()) / max(total_before, 1)
-                )
-            else:
-                # a silently partial relation is a wrong answer, not a result
-                raise RuntimeError(
-                    f"rules {sorted(scc)} did not reach fixpoint in "
-                    f"{MAX_FIXPOINT_ROUNDS} rounds; raise "
-                    "dataworks_spark.docs.datalog.MAX_FIXPOINT_ROUNDS or "
-                    "bound the rules"
-                )
+        caller = self.spark or next(iter(rels.values())).sparkSession
+        rt = _FixpointRuntime(caller)
+        for _ in range(1, MAX_FIXPOINT_ROUNDS + 1):
+            rt(sum(counts.values()))
+            # expose this round's relations + deltas to the clause
+            # compiler under the member names / delta sentinels (a
+            # member may have a relation but no delta this round —
+            # pop its stale sentinel rather than index into deltas)
+            for n in rels:
+                rule_env[n] = rels[n]
+            for r in members:
+                if r.name in deltas:
+                    rule_env[f"{r.name}@delta"] = deltas[r.name]
+                else:
+                    rule_env.pop(f"{r.name}@delta", None)
+            # relation updates are DEFERRED to the end of the round
+            # (synchronous semantics): every member derives against
+            # the round-START rels/deltas, which are exactly what
+            # rule_env exposes. Updating rels mid-loop desynced the
+            # two — a later member's body would pass the `in rels`
+            # guard, miss rule_env, fall through _apply_rule_call →
+            # _eval_rule → _eval_component and recurse unboundedly
+            # (r10 review, verified live on a seedless member read
+            # at a full position of a two-call body).
+            new_deltas: dict[str, DataFrame] = {}
+            next_rels = dict(rels)
+            grew = False
+            for r in members:
+                grown: DataFrame | None = None
+                for body in r.bodies:
+                    positions = [
+                        i
+                        for i, c in enumerate(body)
+                        if isinstance(c[0], str) and c[0] in scc
+                    ]
+                    if not positions:
+                        continue  # seed body — contributed once
+                    if any(body[i][0] not in rels for i in positions):
+                        continue  # a callee not yet activated
+                    for pos in positions:
+                        callee = body[pos][0]
+                        if callee not in deltas:
+                            continue  # no delta this round
+                        variant = list(body)
+                        variant[pos] = (f"{callee}@delta", *body[pos][1:])
+                        g = self._eval_clauses(
+                            variant, {}, rule_map, rule_env
+                        ).select(*heads[r.name])
+                        grown = g if grown is None else grown.unionByName(g)
+                if grown is None:
+                    continue
+                if r.name in rels:
+                    new = grown.dropDuplicates().join(
+                        rels[r.name], on=heads[r.name], how="left_anti"
+                    )
+                else:
+                    new = grown.dropDuplicates()
+                # lift onto the loop session so the checkpoint+count
+                # action plans under loop-sized confs without
+                # touching the caller's session (_FixpointRuntime)
+                new = rt.lift(new).localCheckpoint(eager=False)
+                n_new = new.count()
+                if n_new == 0:
+                    continue
+                grew = True
+                new_deltas[r.name] = new
+                if r.name in rels:
+                    next_rels[r.name] = (
+                        rt.lift(rt.accumulate(rels[r.name], new))
+                        .localCheckpoint(eager=False)
+                    )
+                    counts[r.name] += n_new
+                else:
+                    next_rels[r.name] = new  # late activation
+                    counts[r.name] = n_new
+            rels = next_rels
+            deltas = new_deltas
+            if not grew:
+                break
+        else:
+            # a silently partial relation is a wrong answer, not a result
+            raise RuntimeError(
+                f"rules {sorted(scc)} did not reach fixpoint in "
+                f"{MAX_FIXPOINT_ROUNDS} rounds; raise "
+                "dataworks_spark.docs.datalog.MAX_FIXPOINT_ROUNDS or "
+                "bound the rules"
+            )
 
         # final relations into the memo env
         for n in rels:
-            rule_env[n] = _lift(rels[n], self.spark)
+            rule_env[n] = _lift(rels[n], caller)
         # a member that never activated derives the EMPTY relation —
         # the fixpoint converged, so re-evaluating any of its bodies
         # against the FINAL partner relations is empty by construction;

@@ -38,16 +38,14 @@ class DocStoreSink:
         id_col: Column | str,
         ts_col: str,
         durable_path: str | None = None,
-        compact_every: int = 1,
     ):
         """``durable_path`` switches the sink to durable compaction:
-        every ``compact_every`` applied batches, the store is
-        incrementally compacted to partitioned parquet at that path —
-        only the partitions the accumulated delta touched are rewritten
+        after every applied batch, the store is incrementally compacted
+        to partitioned parquet at that path — only the partitions the
+        batch touched are rewritten
         (:meth:`DocumentStore.compact_incremental`), and the in-memory
         state re-roots on the durable files (lineage truncated to a
-        scan). Between durable points, batches checkpoint in-process.
-        This is the §3.2 ingest loop's durability story at 100 TB:
+        scan). This is the §3.2 ingest loop's durability story at 100 TB:
         per-epoch IO proportional to the delta.
 
         RESTART RECOVERY: if ``durable_path`` already holds data, the
@@ -57,22 +55,13 @@ class DocStoreSink:
         durable rows' max transaction stamp. Without this, a fresh
         process would compute "changed partitions" from its (empty)
         in-memory state and dynamic-overwrite durable partitions with
-        delta-only content — silent data loss.
-
-        DURABILITY TRADE: ``compact_every > 1`` amortizes write cost
-        but widens the loss window — Spark commits a foreachBatch epoch
-        to the streaming checkpoint when the callback returns, so up to
-        ``compact_every - 1`` acknowledged batches live only in process
-        memory until the next durable point and die with the process.
-        Keep the default of 1 for every-epoch durability."""
+        delta-only content — silent data loss."""
         self.ref = store if isinstance(store, StoreRef) else StoreRef(store)
         self._id_col = id_col
         self._ts_col = ts_col
         self.batches_applied = 0
         self._applied_epochs: set[int] = set()
         self._durable_path = durable_path
-        self._compact_every = max(int(compact_every), 1)
-        self._pending = 0
         self._durable_since = _dt.datetime.min
         if durable_path is not None:
             self._recover(durable_path)
@@ -168,23 +157,18 @@ class DocStoreSink:
             # exactly AT the boundary is re-covered — an idempotent
             # partition rewrite, never data loss.
             boundary = s._now()
-            if self._durable_path is not None and self._pending + 1 >= self._compact_every:
-                # covers every batch since the last durable point (their
-                # tx stamps are >= _durable_since)
+            if self._durable_path is not None:
+                # covers this batch: its tx stamps are >= _durable_since
                 new_s = new_s.compact_incremental(
                     self._durable_path, since=self._durable_since
                 )
                 self._durable_since = boundary
-                self._pending = 0
-            else:
-                self._pending += 1
             self._applied_epochs.add(epoch_id)
             return new_s
 
         # set-based bulk append: every row becomes a version at its own
         # event-ts in ONE put_log pass (no per-ts transactions)
-        before = self.ref.swap(_apply)
-        _ = before
+        self.ref.swap(_apply)
         self.batches_applied += 1
 
     def attach(self, stream_df: DataFrame, checkpoint: str):

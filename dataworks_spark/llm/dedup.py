@@ -1626,22 +1626,22 @@ def near_dup_clusters(
     skipped is a driver round-trip saved. Probe-only rounds count
     toward ``max_iterations`` in round units.
 
-    The loop runs on the shared ISOLATED fixpoint session
-    (`ops/recursive._fixpoint_session`): its byte-based AQE coalescing
-    (parallelismFirst=false) sizes each round's stages to the label
-    relation's actual bytes — a 7k-edge graph runs 1-2 tasks per stage
-    instead of inheriting the caller's parallelism floor, and a
-    corpus-scale graph still fans out by bytes. Loop rounds never
+    The loop runs on its own private loop session
+    (`ops/recursive._FixpointRuntime`, made for this call and shared
+    with no other loop): AQE stays on there, and its byte-based
+    coalescing (parallelismFirst=false) sizes each round's stages to
+    the label relation's actual bytes — a 7k-edge graph runs 1-2 tasks
+    per stage instead of inheriting the caller's parallelism floor,
+    and a corpus-scale graph still fans out by bytes. Loop rounds never
     expand their input (min-label is row-preserving), which is exactly
-    the precondition the fixpoint session's conf is tuned for; the
-    caller's session confs are never touched, and the RESULT is lifted
-    back onto the caller's session so downstream actions plan under
-    the caller's confs, mirroring ops/recursive.transitive_closure's exit."""
-    from dataworks_spark.ops.recursive import _fixpoint_session, _lift
+    the precondition that conf is tuned for; the caller's session
+    confs are never touched, and the RESULT is lifted back onto the
+    caller's session so downstream actions plan under the caller's
+    confs, mirroring ops/recursive.transitive_closure's exit."""
+    from dataworks_spark.ops.recursive import _FixpointRuntime, _lift
 
     caller = pairs.sparkSession
-    fs = _fixpoint_session(caller)
-    pairs = _lift(pairs, fs)
+    pairs = _FixpointRuntime(caller).lift(pairs)
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     # non-eager: the first probe materializes edges + round 1 in ONE
     # job instead of paying a separate checkpoint action

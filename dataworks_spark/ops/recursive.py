@@ -15,7 +15,8 @@ driver round-trips (scheduler barriers, lineage checkpoints) dominate
 over join work, so log-depth wins decisively for deep graphs. (General
 semi-naive evaluation of Datalog rules lives in
 ``docs.datalog.DatalogDB._eval_component``; it shares this module's
-per-round sizing, :func:`adaptive_rounds`.)
+:class:`_FixpointRuntime` — one private loop session per call and the
+per-round sizing.)
 
 Mechanics:
   - `localCheckpoint()` per round truncates lineage so the plan doesn't
@@ -30,8 +31,9 @@ Mechanics:
 from __future__ import annotations
 
 import math
-from contextlib import contextmanager
+import threading
 
+from pyspark import RDD
 from pyspark.sql import DataFrame
 
 
@@ -40,69 +42,82 @@ _ROW_BYTES = 64
 #: post-shuffle partition target — Spark's AQE advisory size.
 _TARGET_PARTITION_BYTES = 64 << 20
 
-
-def _fixpoint_session(spark):
-    """The dedicated fixpoint session for ``spark``: a cached
-    ``newSession()`` — same SparkContext, executors, and (shared)
-    cache manager, but its OWN SQL conf — so fixpoint loops can size
-    shuffles and suspend AQE without mutating the caller's
-    session-global confs (a concurrent query on the caller's session
-    is never planned under loop-tuned settings). Confs a query's
-    semantics depend on (session timezone) are mirrored from the
-    parent on every entry, since runtime ``conf.set`` calls on the
-    parent don't propagate to an already-created child session."""
-    fs = getattr(spark, "_dataworks_fixpoint_session", None)
-    if fs is None:
-        fs = spark.newSession()
-        # byte-based coalescing (not a parallelism floor) for the one
-        # AQE-on materialization (the seed): a tiny seed lands on 1-2
-        # tasks, a hub-blown seed keeps byte-proportional parallelism
-        fs.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        # AQE pinned ON regardless of the parent session's setting: the
-        # seed materialization and the label-propagation loops (see
-        # llm/dedup.near_dup_clusters) depend on byte-based coalescing;
-        # inheriting a parent's AQE=off was measured to blow the
-        # fixpoint queries up 4-6x. adaptive_rounds still suspends AQE
-        # round-by-round inside its own loop (save/restore on fs).
-        fs.conf.set("spark.sql.adaptive.enabled", "true")
-        try:
-            spark._dataworks_fixpoint_session = fs
-        except Exception:  # noqa: BLE001 — unexpected immutable session obj
-            pass
-    fs.conf.set(
-        "spark.sql.session.timeZone", spark.conf.get("spark.sql.session.timeZone")
-    )
-    return fs
+# pyspark's SparkSession constructor re-binds the process-global
+# ``RDD.toDF`` to the newest session; loop sessions put it back under
+# this lock so concurrent loops cannot leave it on one of theirs
+_NEW_SESSION_LOCK = threading.Lock()
 
 
 def _lift(df: DataFrame, session) -> DataFrame:
     """Re-root ``df``'s logical plan on another same-context session, so
-    the next ACTION on it plans under that session's conf. Falls back to
-    returning ``df`` unchanged if the internal Dataset API is absent
-    (e.g. a future Connect-only runtime) — the loop then runs unisolated
-    on the caller's session, which is correct, just less polite."""
-    try:
-        jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            session._jsparkSession, df._jdf.logicalPlan()
-        )
-        return DataFrame(jdf, session)
-    except Exception:  # noqa: BLE001
-        return df
+    the next ACTION on it plans under that session's conf. Goes through
+    the internal ``classic.Dataset.ofRows`` (Spark 4's classic
+    runtime); the fixpoint tests pin that results land on the caller's
+    session."""
+    jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, session)
 
 
 class _FixpointRuntime:
-    """Yielded by :func:`adaptive_rounds`. Callable (``rt(rows)``)
-    resizes the loop session's shuffle partitions from the exact
-    materialized count and keeps that count in ``rt.partitions``;
-    ``rt.lift(df)`` re-roots a round's relation on the loop session so
-    its checkpoint+count action executes there."""
+    """One fixpoint call's private loop session and per-round sizing.
+
+    ``session`` is a fresh ``newSession()`` of the caller's session —
+    same SparkContext, executors and cache manager, its OWN SQL conf —
+    made for this call and dropped with it. Loops share no settings
+    with the caller or with each other, so nothing is restored on exit
+    and two threads' loops on one parent cannot leave each other's
+    confs behind. The caller's session timezone is copied (query
+    semantics depend on it; later ``conf.set`` calls on the parent do
+    not reach a child session).
+
+    The session starts with AQE ON whatever the parent's setting
+    (inheriting AQE=off was measured to blow the fixpoint queries up
+    4-6x) and byte-based coalescing (``parallelismFirst=false``) for
+    the work whose size the driver does not know yet — a closure's
+    seed, ``near_dup_clusters``' label rounds: a tiny input lands on
+    1-2 tasks per stage, a hub-blown one keeps byte-proportional
+    parallelism.
+
+    ``rt(rows)`` is called before each counted round with the rows the
+    driver just counted. It suspends AQE — the driver measures every
+    round's cardinality, the runtime statistic AQE coalescing uses,
+    one stage earlier, so AQE's per-stage re-planning is pure latency —
+    and sets shuffle partitions to ``rows·growth·row_bytes / 64 MB``
+    (floor 1, no cap: a cluster-scale relation gets cluster-scale
+    parallelism), kept in ``rt.partitions``; a 20k-row round then
+    schedules 1 task per stage instead of the session default's 32+.
+    ``growth`` is twice the last observed growth, at least 2: a
+    squaring can grow a closure quadratically (hub graphs), so a
+    multiplicative ramp is caught a round early and a mis-size lasts
+    one round. ``rt.lift(df)`` re-roots a relation on the loop session
+    so its checkpoint+count action plans there."""
 
     def __init__(self, spark):
-        self.session = _fixpoint_session(spark)
+        with _NEW_SESSION_LOCK:
+            to_df = RDD.toDF
+            self.session = spark.newSession()
+            RDD.toDF = to_df
+        for key, value in (
+            ("spark.sql.session.timeZone", spark.conf.get("spark.sql.session.timeZone")),
+            ("spark.sql.adaptive.enabled", "true"),
+            ("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"),
+        ):
+            self.session.conf.set(key, value)
         self.partitions: int | None = None
+        self._rows: int | None = None
+        self._growth = 2.0
 
     def __call__(self, rows: int) -> None:
-        self.partitions = max(1, math.ceil(rows * _ROW_BYTES / _TARGET_PARTITION_BYTES))
+        if self._rows is not None:
+            self._growth = max(2.0, 2.0 * rows / max(self._rows, 1))
+        self._rows = rows
+        self.partitions = max(
+            1,
+            math.ceil(int(rows * self._growth) * _ROW_BYTES / _TARGET_PARTITION_BYTES),
+        )
+        self.session.conf.set("spark.sql.adaptive.enabled", "false")
         self.session.conf.set("spark.sql.shuffle.partitions", str(self.partitions))
 
     def accumulate(self, rel: DataFrame, new: DataFrame) -> DataFrame:
@@ -115,45 +130,6 @@ class _FixpointRuntime:
 
     def lift(self, df: DataFrame) -> DataFrame:
         return _lift(df, self.session)
-
-
-@contextmanager
-def adaptive_rounds(spark):
-    """Per-round adaptive shuffle parallelism for driver-side fixpoint
-    loops, scoped to an ISOLATED session.
-
-    Every fixpoint round materializes and counts its relation, so the
-    driver KNOWS the data size before planning the next round — the same
-    runtime statistic AQE coalescing uses, available one stage earlier.
-    Yields a runtime whose ``rt(rows)`` sets shuffle partitions to
-    ``rows·row_bytes / 64 MB`` (floor 1, no cap: a cluster-scale
-    relation gets cluster-scale parallelism) so a 20k-row round
-    schedules 1 task per stage instead of the session default's 32+ —
-    task scheduling, not join work, dominates small fixpoint rounds.
-    Loop relations are re-rooted onto the loop session with
-    ``rt.lift(df)`` before their materializing action.
-
-    AQE is suspended INSIDE the loop (and restored on exit): adaptive
-    execution exists to fix unknown post-shuffle sizes at runtime, but a
-    fixpoint driver measures every round's cardinality anyway — inside
-    the loop AQE's per-stage re-planning round-trips are pure latency on
-    work whose partitioning was just set from exact counts.
-
-    All of this happens on :func:`_fixpoint_session` — the caller's
-    session confs are never touched, so queries planned concurrently on
-    the caller's session are unaffected. (Two fixpoint loops on the
-    same parent session still share the loop session — fixpoints
-    themselves are driver-sequential by construction.)"""
-    rt = _FixpointRuntime(spark)
-    fs = rt.session
-    orig = fs.conf.get("spark.sql.shuffle.partitions")
-    orig_aqe = fs.conf.get("spark.sql.adaptive.enabled")
-    try:
-        fs.conf.set("spark.sql.adaptive.enabled", "false")
-        yield rt
-    finally:
-        fs.conf.set("spark.sql.shuffle.partitions", orig)
-        fs.conf.set("spark.sql.adaptive.enabled", orig_aqe)
 
 
 def transitive_closure(
@@ -205,6 +181,7 @@ def transitive_closure(
         )
 
     spark = edges.sparkSession
+    rt = _FixpointRuntime(spark)
     # Seed depth stays at TWO squarings (depth ≤4 in one job): folding
     # more was measured SLOWER (r5) — the squaring join's two sides
     # rename different columns to __mid, so they are different subplans
@@ -224,8 +201,8 @@ def transitive_closure(
     # while a blown-up seed keeps its parallelism. Only the loop
     # rounds below run AQE-off — there the driver holds an exact
     # materialized count each round. The seed is LIFTED onto the
-    # dedicated fixpoint session (parallelismFirst=false lives there
-    # permanently), so the caller's session confs are never touched.
+    # call's loop session, so the caller's session confs are never
+    # touched.
     base = edges.select(src, dst)
     if not assume_distinct:
         base = base.dropDuplicates()
@@ -234,9 +211,7 @@ def transitive_closure(
     if depth_bound is None or depth_bound > 2:
         seed = _square(seed.dropDuplicates())
         seed_depth = 4
-    closure = _lift(
-        seed.dropDuplicates(), _fixpoint_session(spark)
-    ).localCheckpoint(eager=False)
+    closure = rt.lift(seed.dropDuplicates()).localCheckpoint(eager=False)
     rounds = max_iterations
     bound_proven = False
     if depth_bound is not None:
@@ -269,61 +244,16 @@ def transitive_closure(
             out = _square(out).dropDuplicates()
         return _lift(out, spark)
     prev = closure.count()
-    if bound_proven:
-        # Bound-proven rounds need no convergence counts at all — the
-        # counts were only ever the convergence probe — so rounds run
-        # in chained PAIRS between materializations: two squarings with
-        # a mid-plan dedup is exactly the (measured-good) seed shape —
-        # the mid dedup's exchange is identical on both sides of the
-        # next squaring, so ReuseExchange runs it once, and the plan
-        # stays two levels deep over a materialized checkpoint. A
-        # depth-≤16 closure is then ONE internal barrier (the seed
-        # count) and the caller's own action materializes the rest.
-        # (Deeper lazy chaining re-derives unmaterialized intermediates
-        # exponentially — the r2/r5 measured dead end.)
-        with adaptive_rounds(spark) as rt:
-            # growth-TRACKED sizing (r10 review): a squaring can grow
-            # the closure quadratically (hub graphs), and with AQE off
-            # inside the loop a fixed ×4 assumption under-partitions
-            # the blowup round. Sizing from twice the last observed
-            # growth keeps well-behaved graphs at the old cheap sizing
-            # while a multiplicative ramp is caught a round early;
-            # any residual mis-size lasts exactly one round (the next
-            # rt() uses the true count).
-            factor = 4.0
-            while rounds > 2:
-                rt(int(prev * factor))
-                closure = rt.lift(
-                    _square(_square(closure).dropDuplicates()).dropDuplicates()
-                ).localCheckpoint(eager=False)
-                cur = closure.count()
-                if cur == prev:
-                    # the graph closed sooner than the proven bound —
-                    # honor the documented early exit instead of paying
-                    # the remaining squaring barriers on a converged
-                    # relation (r9 review: prev was recomputed but
-                    # never compared on this path)
-                    return _lift(closure, spark)
-                factor = max(4.0, 2.0 * cur / max(prev, 1))
-                prev = cur
-                rounds -= 2
-        out = closure
-        for _ in range(rounds):
-            out = _square(out).dropDuplicates()
-        return _lift(out, spark)
-    with adaptive_rounds(spark) as rt:
-        factor = 2.0  # growth-tracked (see the bound-proven loop note)
-        for _ in range(rounds):
-            rt(int(prev * factor))
-            closure = rt.lift(
-                _square(closure).dropDuplicates()
-            ).localCheckpoint(eager=False)
-            cur = closure.count()
-            if cur == prev:
-                return _lift(closure, spark)
-            factor = max(2.0, 2.0 * cur / max(prev, 1))
-            prev = cur
-    if strict:
+    for _ in range(rounds):
+        rt(prev)
+        closure = rt.lift(
+            _square(closure).dropDuplicates()
+        ).localCheckpoint(eager=False)
+        cur = closure.count()
+        if cur == prev:
+            return _lift(closure, spark)
+        prev = cur
+    if strict and not bound_proven:
         raise RuntimeError(
             f"transitive_closure did not converge in {max_iterations} rounds; "
             "raise max_iterations (or pass strict=False for a bounded-depth closure)"

@@ -372,9 +372,9 @@ def test_linear_closure_rules_match_semi_naive_on_cycles(spark, monkeypatch):
 
     for rec in bodies.values():
         with monkeypatch.context() as m:
-            # the component driver's semi-naive rounds run inside
-            # adaptive_rounds; the doubling operator never reaches it
-            m.setattr(datalog, "adaptive_rounds", general_path_forbidden)
+            # the component driver's semi-naive rounds run on a
+            # _FixpointRuntime; the doubling operator never makes one there
+            m.setattr(datalog, "_FixpointRuntime", general_path_forbidden)
             doubled = run(rec)
         with monkeypatch.context() as m:
             m.setattr(DatalogDB, "_closure_edges", lambda *_: None)
@@ -439,6 +439,36 @@ def test_general_rule_linear_non_closure_semi_naive(spark, monkeypatch):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) <= 19, sorted(jobs)
+
+
+def test_recursive_rule_result_on_registered_frames_session(spark):
+    """A DatalogDB built without a session runs a recursive rule's
+    rounds on a private loop session and lifts the rule's result back
+    onto the registered frames' session, so the query's frame plans
+    under the caller's confs."""
+    from dataworks_spark.docs.datalog import DatalogDB
+
+    chain = [(f"n{i}", f"n{i + 1}") for i in range(4)]
+    d = DatalogDB()
+    d.register(
+        "node",
+        spark.createDataFrame(
+            [(s, t, "src" if s == "n0" else "mid") for s, t in chain],
+            "id string, dep string, kind string",
+        ),
+        "id",
+    )
+    rule = Rule(
+        "reach",
+        head=("?a", "?b"),
+        bodies=[
+            [("?a", "node/kind", "src"), ("?a", "node/dep", "?b")],
+            [("reach", "?a", "?m"), ("?m", "node/dep", "?b")],
+        ],
+    )
+    out = d.q(find=["?a", "?b"], where=[("reach", "?a", "?b")], rules=[rule])
+    assert out.sparkSession is spark
+    assert {(r.a, r.b) for r in out.collect()} == {("n0", f"n{i}") for i in range(1, 5)}
 
 
 # ── r9 fourth-review regressions ─────────────────────────────────────
