@@ -27,16 +27,20 @@ literal, or None (existence only). Clauses that are not triples are
 predicates: ``(op, arg, ...)`` with op in a small builtin set or a
 callable building a Column.
 
-Variable unification compiles to equi-joins on the variable's column;
-repeated attributes on one entity var become projections of the same
-wide row (C1 "self-join" degenerates to select — exactly the wide-table
-shortcut SURVEY §2 C1 prescribes).
+Every pattern — a triple, a negated triple, a rule call — is one
+projection of a relation onto ``(column, term)`` pairs
+(:meth:`DatalogDB._bind`). Variable unification compiles to equi-joins
+on the variable's column: each triple is its own projection of its
+namespace's table, so two attributes of one entity var are two
+projections equi-joined on the id.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterable, Sequence
 from dataclasses import dataclass
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,6 +73,12 @@ def _vcol(x: str) -> str:
     return x[1:]
 
 
+def _branch(br) -> list:
+    """The clause list of an or-branch: ``("and", clause, ...)`` is
+    Crux's multi-clause branch, any other clause a one-clause branch."""
+    return list(br[1:]) if isinstance(br[0], str) and br[0] == "and" else [br]
+
+
 def _called_names(clauses) -> set:
     """Every clause-head name appearing in a clause list, walking
     through or/and branches (shared by the nested-self-call guard and
@@ -78,11 +88,7 @@ def _called_names(clauses) -> set:
         h = c[0]
         if isinstance(h, str) and h in ("or", "and"):
             for br in c[1:]:
-                out |= _called_names(
-                    [br]
-                    if not (isinstance(br[0], str) and br[0] == "and")
-                    else list(br[1:])
-                )
+                out |= _called_names(_branch(br))
         elif isinstance(h, str):
             out.add(h)
     return out
@@ -213,26 +219,36 @@ class DatalogDB:
         find-tuple) but not returned — on BOTH branches: with
         aggregates it widens the set the aggregate folds over; without
         aggregates the result is a bag where each find-tuple repeats
-        once per distinct with-binding (r12)."""
+        once per distinct with-binding (r12).
+
+        ``args`` keys that start with ``?`` bind that variable to one
+        scalar value (Crux's ``:in``): an equality filter on the
+        bindings, and a ``ValueError`` when the variable is unbound or
+        the value is a DataFrame. Any other key names a constant that
+        only predicate clauses read; a constant in a triple, a negated
+        triple or a rule call is always a literal."""
         args = args or {}
+        for var, value in args.items():
+            if isinstance(value, DataFrame):
+                # a relation-valued :in binding is not supported;
+                # skipping it would return the unfiltered result
+                raise ValueError(f"arg {var!r} is a DataFrame; args bind scalar values")
         rule_map = {r.name: r for r in rules}
         rule_env: dict[str, DataFrame] = {}
         bound = self._eval_clauses(where, args, rule_map, rule_env)
 
         for var, value in args.items():
-            if isinstance(value, DataFrame):
-                continue
-            if _is_var(var) and _vcol(var) not in bound.columns:
+            if not _is_var(var):
+                continue  # a named predicate constant
+            if _vcol(var) not in bound.columns:
                 # a ?-arg that binds nothing is a typo'd :in binding —
                 # silently skipping it would return the full unfiltered
                 # result (Crux errors on undeclared :in; r9 review).
-                # Non-? keys stay legal as named predicate constants.
                 raise ValueError(
                     f"arg {var!r} binds no variable of the query "
                     f"(bound: {sorted(bound.columns)})"
                 )
-            if _vcol(var) in bound.columns:
-                bound = bound.filter(F.col(_vcol(var)) == F.lit(value))
+            bound = bound.filter(F.col(_vcol(var)) == F.lit(value))
 
         group_vars: list[str] = []
         agg_specs: list[tuple[str, str, str]] = []  # (fn, var, out_name)
@@ -267,23 +283,6 @@ class DatalogDB:
                     f"(bound: {sorted(bound.columns)})"
                 )
 
-        if not agg_specs:
-            if with_:
-                # Datomic's :with without aggregates switches the find
-                # tuple to bag semantics: distinct-ness is judged over
-                # find+with, then the with columns are dropped, so a
-                # find-tuple occurs once PER distinct with-binding
-                # (r12 ADVICE low — previously with_ was silently
-                # ignored on this branch).
-                keep = dict.fromkeys(
-                    [_vcol(v) for v in find] + [_vcol(v) for v in with_]
-                )
-                return (
-                    bound.select(*keep)
-                    .dropDuplicates()
-                    .select(*[_vcol(v) for v in find])
-                )
-            return bound.select(*[_vcol(v) for v in find]).dropDuplicates()
         # distinct FIRST (set semantics over find+with vars), then one
         # map-side-combined groupBy — both shuffles key on the same
         # columns, so at scale this is one exchange + a mostly-local agg
@@ -293,6 +292,10 @@ class DatalogDB:
             + [_vcol(v) for v in with_]
         )
         base = bound.select(*keep).dropDuplicates()
+        if not agg_specs:
+            # dropping the with columns after the distinct makes the
+            # find-tuples a bag: one per distinct with-binding
+            return base.select(*[_vcol(v) for v in find])
         exprs = [
             self._FIND_AGGS[fn](F.col(_vcol(var))).alias(out)
             for fn, var, out in agg_specs
@@ -330,12 +333,23 @@ class DatalogDB:
             if (isinstance(head, str) and head in _PREDICATES) or callable(head):
                 filters.append(clause)
                 continue
-            bound = self._apply_triple(bound, clause, args)
+            bound = self._merge(bound, self._triple(clause))
 
         for triple in negations:
+            # ("not", (e, attr, v)) keeps the bindings with NO matching
+            # triple — left_anti on the shared variables
             if bound is None:
                 raise ValueError("negation requires a positive pattern first")
-            bound = self._apply_negation(bound, triple, args)
+            if not _is_var(triple[0]):
+                raise ValueError(
+                    "negation patterns need a variable entity term "
+                    f"(got constant {triple[0]!r}); bind it positively first"
+                )
+            proj = self._triple(triple)
+            shared = [c for c in proj.columns if c in bound.columns]
+            if not shared:
+                raise ValueError("negation pattern shares no variables with the query")
+            bound = bound.join(proj, on=shared, how="left_anti")
 
         if bound is None:
             raise ValueError("query has no triple patterns")
@@ -352,6 +366,41 @@ class DatalogDB:
         shared = [c for c in proj.columns if c in bound.columns]
         return bound.join(proj, on=shared, how="inner") if shared else bound.crossJoin(proj)
 
+    @staticmethod
+    def _bind(rel: DataFrame, pairs: Iterable[tuple[str, object]]) -> DataFrame:
+        """Project ``rel`` onto the ``(column, term)`` pairs of one
+        pattern — the only place pattern terms become filters and
+        aliases. A variable aliases its column, and a repeat of it is an
+        equality filter against its first column (``(?x attr ?x)``
+        unifies; two same-named aliases would be ambiguous downstream).
+        A constant is an equality filter, and ``None`` (existence only)
+        requires the column to be non-NULL. A pattern with no variable
+        is a 0-column, ≤1-row gate: a cross join with it keeps or
+        empties the bindings without duplicating them."""
+        cols, conds, first = [], [], {}
+        for col, term in pairs:
+            if term is None:
+                conds.append(F.col(col).isNotNull())
+            elif not _is_var(term):
+                conds.append(F.col(col) == F.lit(term))
+            elif _vcol(term) in first:
+                conds.append(F.col(col) == F.col(first[_vcol(term)]))
+            else:
+                first[_vcol(term)] = col
+                cols.append(F.col(col).alias(_vcol(term)))
+        if conds:
+            rel = rel.filter(reduce(and_, conds))
+        return rel.select(*cols) if cols else rel.limit(1).select()
+
+    def _triple(self, triple: tuple) -> DataFrame:
+        """The bindings of a triple pattern ``(e, "ns/field", v)``: the
+        namespace's table projected onto its id and ``field`` columns. A
+        constant entity is Crux's point lookup — a filter on the id."""
+        evar, attr, *rest = triple
+        ns, field = attr.split("/", 1)
+        df, id_col = self.table(ns)
+        return self._bind(df, [(id_col, evar), (field, rest[0] if rest else None)])
+
     # -- or-clauses (Crux multi-clause branches) -------------------------
     def _apply_or(
         self,
@@ -364,10 +413,7 @@ class DatalogDB:
         ``("and", clause, ...)`` (Crux's multi-clause branch). Branches
         must bind the same variable set; the result is the union of the
         branch bindings on those variables."""
-        compiled: list[DataFrame] = []
-        for br in branches:
-            clauses = list(br[1:]) if (isinstance(br[0], str) and br[0] == "and") else [br]
-            compiled.append(self._eval_clauses(clauses, args, rule_map, rule_env))
+        compiled = [self._eval_clauses(_branch(br), args, rule_map, rule_env) for br in branches]
         varset = set(compiled[0].columns)
         for b in compiled[1:]:
             if set(b.columns) != varset:
@@ -379,88 +425,6 @@ class DatalogDB:
         for b in compiled[1:]:
             out = out.unionByName(b)
         return out.dropDuplicates()
-
-    # -- triple compilation ---------------------------------------------
-    def _apply_triple(self, bound: DataFrame | None, triple: tuple, args: dict) -> DataFrame:
-        evar, attr, *rest = triple
-        value = rest[0] if rest else None
-        ns, field = attr.split("/", 1)
-        df, id_col = self.table(ns)
-
-        cols, flt = [], None
-
-        def _and(c):
-            nonlocal flt
-            flt = c if flt is None else (flt & c)
-
-        if _is_var(evar):
-            cols.append(F.col(id_col).alias(_vcol(evar)))
-        else:
-            # constant ENTITY — Crux's point lookup [(const attr ?v)]:
-            # filter on the id, never mangle the constant into a column
-            # name (r9 review: a constant here was treated as a
-            # variable, returning EVERY entity under a stripped alias)
-            _and(F.col(id_col) == F.lit(evar))
-        if value is None:
-            # existence pattern [e :ns/field] — attribute must be present
-            _and(F.col(field).isNotNull())
-        elif _is_var(value):
-            if _is_var(evar) and _vcol(value) == _vcol(evar):
-                # repeated variable in one triple = unification filter
-                # (?x attr ?x), not two same-named output columns
-                # (r9 review: the duplicate alias broke downstream joins
-                # with AMBIGUOUS_REFERENCE)
-                _and(F.col(field) == F.col(id_col))
-            else:
-                cols.append(F.col(field).alias(_vcol(value)))
-        else:
-            # constant-bound pattern (C3, collector.clj:74-78)
-            _and(F.col(field) == F.lit(value))
-        proj = df.filter(flt) if flt is not None else df
-        if cols:
-            proj = proj.select(*cols)
-        else:
-            # all-constant triple = existence assertion: a 0-column,
-            # ≤1-row gate (crossJoin with it keeps or empties the
-            # bindings without duplication)
-            proj = proj.limit(1).select()
-
-        if bound is None:
-            return proj
-        shared = [c for c in proj.columns if c in bound.columns]
-        if shared:
-            # unification = equi-join on shared vars (C1/C2)
-            return bound.join(proj, on=shared, how="inner")
-        return bound.crossJoin(proj)
-
-    def _apply_negation(self, bound: DataFrame, triple: tuple, args: dict) -> DataFrame:
-        """``("not", (e, attr, v))`` keeps bindings with NO matching
-        triple — left_anti on the shared variables."""
-        evar, attr, *rest = triple
-        value = rest[0] if rest else None
-        ns, field = attr.split("/", 1)
-        df, id_col = self.table(ns)
-        if not _is_var(evar):
-            raise ValueError(
-                "negation patterns need a variable entity term "
-                f"(got constant {evar!r}); bind it positively first"
-            )
-        cols = [F.col(id_col).alias(_vcol(evar))]
-        proj = df
-        if value is None:
-            proj = proj.filter(F.col(field).isNotNull())
-        elif _is_var(value):
-            if _vcol(value) == _vcol(evar):
-                proj = proj.filter(F.col(field) == F.col(id_col))
-            else:
-                cols.append(F.col(field).alias(_vcol(value)))
-        else:
-            proj = proj.filter(F.col(field) == F.lit(args.get(value, value)))
-        proj = proj.select(*cols)
-        shared = [c for c in proj.columns if c in bound.columns]
-        if not shared:
-            raise ValueError("negation pattern shares no variables with the query")
-        return bound.join(proj, on=shared, how="left_anti")
 
     # -- predicates (B7, utils/auth.clj:92-96) ---------------------------
     def _predicate(self, clause: tuple, args: dict) -> Column:
@@ -482,8 +446,7 @@ class DatalogDB:
     ) -> DataFrame:
         """Join a rule-call clause ``(name, term, ...)`` into the
         bindings: the rule's derived relation (materialized once per
-        query) is projected onto the call's terms — variables rename
-        head columns, constants filter them."""
+        query) projected onto the call's terms."""
         name, *terms = clause
         # a name already materialized in rule_env may be a semi-naive
         # delta sentinel ("<rule>@delta") that has no Rule object
@@ -491,31 +454,12 @@ class DatalogDB:
             rel = rule_env[name]
         else:
             rel = self._eval_rule(rule_map[name], rule_map, rule_env)
-        head_cols = rel.columns
-        if len(terms) != len(head_cols):
-            raise ValueError(f"rule {name} has {len(head_cols)} head vars, called with {len(terms)}")
-        cols, flt, seen = [], None, {}
-        for hc, term in zip(head_cols, terms):
-            if _is_var(term):
-                v = _vcol(term)
-                if v in seen:
-                    # repeated variable across call positions =
-                    # unification filter, e.g. (reach ?a ?a) keeps the
-                    # diagonal (r9 review: two same-named aliases broke
-                    # with AMBIGUOUS_REFERENCE instead)
-                    cond = F.col(hc) == F.col(seen[v])
-                else:
-                    seen[v] = hc
-                    cols.append(F.col(hc).alias(v))
-                    continue
-            else:
-                cond = F.col(hc) == F.lit(term)
-            flt = cond if flt is None else (flt & cond)
-        proj = (rel.filter(flt) if flt is not None else rel).select(*cols)
-        # rel is distinct by construction; a full-width variable-only
-        # projection (rename) stays distinct — only constant-filtered
-        # calls project a subset of head columns and need a re-dedup
-        if len(cols) < len(head_cols):
+        if len(terms) != len(rel.columns):
+            raise ValueError(f"rule {name} has {len(rel.columns)} head vars, called with {len(terms)}")
+        proj = self._bind(rel, zip(rel.columns, terms))
+        # rel is distinct by construction, and so is a projection onto
+        # all of its columns; a narrower one needs a re-dedup
+        if len(proj.columns) < len(rel.columns):
             proj = proj.dropDuplicates()
         return self._merge(bound, proj)
 

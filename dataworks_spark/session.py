@@ -47,7 +47,7 @@ def get_spark(app_name: str = "dataworks_spark", cpus: int | None = None) -> Spa
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", os.environ.get("SPARK_GRAFT_AQE", "true"))
+        .config("spark.sql.adaptive.enabled", "true")
         # Byte-based advisory coalescing (parallelismFirst=false, the
         # setting Spark's own docs recommend) with the advisory size
         # tuned to PER-PARTITION WORK, not the 64 MB scan-oriented

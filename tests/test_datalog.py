@@ -526,6 +526,39 @@ def test_unbound_qmark_arg_raises(spark):
         )
 
 
+def test_dataframe_qmark_arg_raises(spark):
+    """A DataFrame-valued ?-arg was skipped, returning the unfiltered
+    result; args bind scalar values."""
+    db = _mini_db(spark)
+    with pytest.raises(ValueError, match=r"'\?h' is a DataFrame"):
+        db.q(
+            find=["?e"],
+            where=[("?e", "alert/handler", "?h")],
+            args={"?h": spark.createDataFrame([("h1",)], "h string")},
+        )
+
+
+def test_negated_constant_is_literal_like_positive(spark):
+    """A constant in a negated triple is a literal, as in a positive
+    one; an args key of the same name does not replace it (args only
+    name predicate constants)."""
+    db = DatalogDB(spark)
+    db.register(
+        "app",
+        spark.createDataFrame([("g", "gold"), ("s", "silver")], "id string, tier string"),
+        "id",
+    )
+    args = {"gold": "silver"}
+    pos = db.q(["?e"], [("?e", "app/tier", "gold")], args=args).collect()
+    neg = db.q(
+        ["?e"],
+        [("?e", "app/tier", "?t"), ("not", ("?e", "app/tier", "gold"))],
+        args=args,
+    ).collect()
+    assert [r.e for r in pos] == ["g"]
+    assert [r.e for r in neg] == ["s"]
+
+
 def test_mutual_recursion_joint_fixpoint(spark):
     """r10 (VERDICT #5): A<->B rules evaluate as one joint semi-naive
     fixpoint (r9 raised a clear error; Crux — the reference's rule

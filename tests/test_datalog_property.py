@@ -2,8 +2,8 @@
 
 An independent, brute-force unification interpreter (plain Python over
 collected rows — no DataFrames) evaluates randomly generated
-conjunctive queries with constants, shared variables, predicates, and
-or-branches; the compiled DataFrame plan must produce exactly the same
+conjunctive queries with constants, shared variables, predicates and
+negated triples; the compiled DataFrame plan must produce exactly the same
 binding set. Mirrors the bitemporal store's property-test strategy
 (`test_bitemporal_property`), which caught a real semantics bug in
 round 1.
@@ -28,6 +28,11 @@ CITIES = [
     # (id, pop, tag)
     (10, 100, "a"), (20, 200, "b"), (30, 100, "c"),
 ]
+NICKS = [
+    # (id, tag, age): keyed by person ids, but only some persons have
+    # one (and id 7 is no person), so a negated nick triple keeps some
+    (1, "a", 30), (3, "b", 40), (5, "a", 25), (7, "c", 55),
+]
 
 ATTRS = {
     "person/age": 1,
@@ -35,8 +40,10 @@ ATTRS = {
     "person/tag": 3,
     "city/pop": 1,
     "city/tag": 2,
+    "nick/tag": 1,
+    "nick/age": 2,
 }
-TABLES = {"person": PEOPLE, "city": CITIES}
+TABLES = {"person": PEOPLE, "city": CITIES, "nick": NICKS}
 
 
 @pytest.fixture(scope="module")
@@ -48,6 +55,7 @@ def db(spark):
         "id",
     )
     d.register("city", spark.createDataFrame(CITIES, "id int, pop int, tag string"), "id")
+    d.register("nick", spark.createDataFrame(NICKS, "id int, tag string, age int"), "id")
     return d
 
 
@@ -76,14 +84,37 @@ def _eval_triple(bindings, clause):
     return out
 
 
+def _eval_not(bindings, clause):
+    """Keep the bindings that no row of the triple matches; a value
+    variable left unbound matches any value, None any present value."""
+    evar, attr, value = clause
+
+    def hit(env, val):
+        if value is None:
+            return val is not None
+        if isinstance(value, str) and value.startswith("?"):
+            return env.get(value, val) == val
+        return val == value
+
+    rows = _triple_rows(attr)
+    return [
+        env for env in bindings
+        if not any(eid == env[evar] and hit(env, val) for eid, val in rows)
+    ]
+
+
 def _eval_query(clauses, find):
     bindings = [{}]
-    preds = []
+    preds, negs = [], []
     for clause in clauses:
         if clause[0] == ">":
             preds.append(clause)
+        elif clause[0] == "not":
+            negs.append(clause[1])
         else:
             bindings = _eval_triple(bindings, clause)
+    for clause in negs:
+        bindings = _eval_not(bindings, clause)
     for op, a, b in preds:
         bindings = [e for e in bindings if e[a] > b]
     return {tuple(env[v] for v in find) for env in bindings}
@@ -92,6 +123,7 @@ def _eval_query(clauses, find):
 # -- strategies -------------------------------------------------------------
 
 person_attr = st.sampled_from(["person/age", "person/city_id", "person/tag"])
+negated_attr = st.sampled_from(["person/age", "person/tag", "nick/age", "nick/tag"])
 city_attr = st.sampled_from(["city/pop", "city/tag"])
 int_const = st.sampled_from([25, 30, 40, 100, 200, 10, 20])
 str_const = st.sampled_from(["a", "b", "c"])
@@ -100,11 +132,14 @@ str_const = st.sampled_from(["a", "b", "c"])
 @st.composite
 def conjunctive_query(draw):
     """1-3 person triples on ?p (+ optional city join via ?c), values
-    either fresh vars, shared vars, or constants; optional predicate."""
+    either fresh vars, shared vars, or constants; 0-2 negated triples on
+    ?p whose value is a fresh var, a shared var, a constant or None
+    (existence); optional predicate."""
     clauses = []
     find_vars = ["?p"]
     n = draw(st.integers(1, 3))
     used_vals = []
+    is_str = {}
     for i in range(n):
         attr = draw(person_attr)
         kind = draw(st.sampled_from(["var", "const", "shared"]))
@@ -116,6 +151,7 @@ def conjunctive_query(draw):
             v = f"?v{i}"
             used_vals.append(v)
             find_vars.append(v)
+            is_str[v] = attr == "person/tag"
         clauses.append(("?p", attr, v))
     if draw(st.booleans()):  # city join through the city_id value
         clauses.append(("?p", "person/city_id", "?cid"))
@@ -127,6 +163,26 @@ def conjunctive_query(draw):
         # pop through a shared var only when cities overlap; instead
         # join on tag equality through a shared variable:
         find_vars += ["?cid", "?pop"]
+    for j in range(draw(st.integers(0, 2))):
+        attr = draw(negated_attr)
+        # every person has every person attribute: a fresh var or an
+        # existence test there would only ever empty the result
+        kind = draw(st.sampled_from(
+            ["const", "shared"] if attr.startswith("person/")
+            else ["var", "const", "shared", "exists"]
+        ))
+        # a shared var of the attribute's type: an int-to-string
+        # comparison aborts under ANSI instead of matching nothing
+        same_type = [u for u in used_vals if is_str[u] == attr.endswith("/tag")]
+        if kind == "const":
+            v = draw(str_const if attr.endswith("/tag") else int_const)
+        elif kind == "shared" and same_type:
+            v = draw(st.sampled_from(same_type))
+        elif kind == "exists":
+            v = None
+        else:
+            v = f"?n{j}"
+        clauses.append(("not", ("?p", attr, v)))
     numeric_vars = [v for v in find_vars[1:] if v not in ("?ct",)]
     if draw(st.booleans()) and numeric_vars:
         v = draw(st.sampled_from(numeric_vars))
