@@ -395,11 +395,16 @@ class DatalogDB:
     def _triple(self, triple: tuple) -> DataFrame:
         """The bindings of a triple pattern ``(e, "ns/field", v)``: the
         namespace's table projected onto its id and ``field`` columns. A
-        constant entity is Crux's point lookup — a filter on the id."""
+        constant entity is Crux's point lookup — a filter on the id. A
+        NULL cell is an absent attribute, which matches no triple (as in
+        Crux): a variable value binds only non-NULL cells, like the
+        existence form ``None``."""
         evar, attr, *rest = triple
         ns, field = attr.split("/", 1)
         df, id_col = self.table(ns)
-        return self._bind(df, [(id_col, evar), (field, rest[0] if rest else None)])
+        v = rest[0] if rest else None
+        exists = [(field, None)] if _is_var(v) else []
+        return self._bind(df, [(id_col, evar), *exists, (field, v)])
 
     # -- or-clauses (Crux multi-clause branches) -------------------------
     def _apply_or(

@@ -21,7 +21,7 @@ the far-future sentinel (reference ``:never``, utils/time.clj:75).
 
 Scale design (100 TB): the physical table is partitioned by entity
 namespace and ``date(valid_from)`` so as-of reads prune partitions; the
-latest-view is a row_number window per id (one shuffle on id); every
+latest view is the as-of read at now (one scan filter, no shuffle); every
 write is one merge that shuffles only the batch and its ids' current
 versions, never the log, and the log is compacted by a periodic
 MERGE-style batch job — never in-place updates.
@@ -191,33 +191,26 @@ def latest_snapshot(
     include_deleted: bool = False,
     now: _dt.datetime | None = None,
 ) -> DataFrame:
-    """Latest-per-id view (E4 / ReadMe.org:34 LWW): one
-    :func:`~dataworks_spark.ops.windows.latest_per_key` pass, DESC on
-    (valid_from, tx_from).
+    """Latest-per-id view (E4 / ReadMe.org:34 LWW). Crux's ``db``
+    without an explicit valid-time is as-of *now*, not max-valid-time,
+    so with ``now`` this is :func:`as_of_snapshot` at ``now`` with no tx
+    coordinate: a version scheduled in the FUTURE (J2 put with future
+    valid-time, demo-app-1.org:125-127) stays invisible until its time
+    arrives, and a partitioned layout prunes every ``valid_date`` after
+    ``now``. With ``now=None`` (for fixture-derived logs whose
+    timestamps are all in the past) it is each id's open-ended
+    tx-current version, ``valid_to = NEVER``.
 
-    ``now`` bounds the view in valid time: versions scheduled in the
-    FUTURE (J2 put with future valid-time, demo-app-1.org:125-127) are
-    excluded until their time arrives — Crux's ``db`` without an
-    explicit valid-time is as-of *now*, not max-valid-time.
-    :meth:`DocumentStore.latest` always passes its clock; the raw
-    function leaves ``now=None`` (unbounded) for fixture-derived logs
-    whose timestamps are all in the past."""
-    from dataworks_spark.ops.windows import latest_per_key
-
-    cur = versions.filter(
-        (F.col("tx_to") == F.lit(NEVER))  # current knowledge
-        & (F.col("valid_from") < F.col("valid_to"))  # non-degenerate interval
-    )
+    Either way it is one scan filter with no window, exact by the tiling
+    invariant stated on :class:`DocumentStore`. A hand-built
+    ``versions`` frame whose intervals leave gaps reads nothing inside a
+    gap."""
     if now is not None:
-        cur = cur.filter(F.col("valid_from") <= F.lit(now).cast("timestamp"))
-    snap = latest_per_key(
-        cur,
-        key=["id"],
-        order_by=[F.col("valid_from").desc(), F.col("tx_from").desc()],
+        return as_of_snapshot(versions, now, include_deleted=include_deleted)
+    snap = versions.filter(
+        (F.col("tx_to") == F.lit(NEVER)) & (F.col("valid_to") == F.lit(NEVER))
     )
-    if not include_deleted:
-        snap = snap.filter(~F.col("deleted"))
-    return snap
+    return snap if include_deleted else snap.filter(~F.col("deleted"))
 
 
 class StoreRef:
@@ -257,6 +250,17 @@ class DocumentStore:
     with shortened validity, and appends the new version; the rest of
     the log passes through untouched. ``await-tx`` (J6) is a no-op:
     Spark writes are synchronous.
+
+    Every read is one visibility filter (:func:`as_of_snapshot`), with
+    no window: :meth:`latest` and :meth:`entity` are the as-of read at
+    the store's clock. That rests on one invariant of the log these
+    writes build: an id's tx-current versions of non-zero length tile
+    its valid timeline, with no overlap and no gap. The merge's rule 2
+    gives no overlap, :func:`version_log` ends each version at the next
+    one (``lead``), the last version is open-ended, and a delete is a
+    tombstone version, not a gap. So at any valid time at most one
+    tx-current version contains it, and it is the one with the largest
+    ``valid_from`` at or before that time.
 
     Each write materializes ONCE, inside the write call, into a local
     checkpoint: the returned store's ``versions`` is a single
@@ -316,11 +320,10 @@ class DocumentStore:
         return as_of_snapshot(self.versions, valid_time, tx_time)
 
     def latest(self) -> DataFrame:
-        """Current documents as-of NOW in valid time (J2: a
-        future-scheduled version stays invisible here until its
-        valid-time arrives — r9 review fix; only :meth:`as_of` honored
-        this before)."""
-        return latest_snapshot(self.versions, now=self._now())
+        """Current documents: the as-of read at the store's clock, with
+        no tx coordinate (current knowledge). A future-scheduled version
+        (J2) stays invisible until its valid-time arrives."""
+        return self.as_of(self._now())
 
     def entity(self, doc_id: str) -> DataFrame:
         """Point lookup (B8, db/app_db.clj:45-48)."""

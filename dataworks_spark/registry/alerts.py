@@ -86,14 +86,12 @@ class AlertScheduler:
             # match precondition (J3; alert.clj:20-31): ids whose current
             # version is still unclaimed. Collect is bounded by the due
             # set — the reference's per-alert loop has the same shape.
-            # latest is evaluated AT THE SCHEDULER'S CLOCK — s.latest()
-            # would use the store's own now_fn, and under a simulated/
-            # future scheduler clock (exactly the future-dated-alert
-            # feature) the due version would be invisible to the claim:
-            # tick() silently 0 until wall-clock caught up (r10 review)
-            from dataworks_spark.docs.store import latest_snapshot
-
-            current = latest_snapshot(s.versions, now=now).select("id", "claimed")
+            # read AT THE SCHEDULER'S CLOCK — s.latest() would use the
+            # store's own now_fn, and under a simulated/future scheduler
+            # clock (exactly the future-dated-alert feature) the due
+            # version would be invisible to the claim: tick() silently 0
+            # until wall-clock caught up (r10 review)
+            current = s.as_of(now).select("id", "claimed")
             ok = current.join(expected, on=["id", "claimed"], how="left_semi").select("id")
             if self.claim_limit is not None:
                 # bounded claim batch: hash-smallest ids win this tick

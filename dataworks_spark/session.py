@@ -33,6 +33,12 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _driver_mem() -> str:
+    """Default driver heap: half of physical memory, at most 24g."""
+    mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    return f"{min(24 * 1024, mb // 2)}m"
+
+
 def get_spark(app_name: str = "dataworks_spark", cpus: int | None = None) -> SparkSession:
     """Create (or get) the engine SparkSession.
 
@@ -75,7 +81,7 @@ def get_spark(app_name: str = "dataworks_spark", cpus: int | None = None) -> Spa
         # re-execution pays full janino recompilation (~50-200 ms per
         # stage — measured 27.4 s → 18.8 s steady total across the
         # query set when raised). Generated classes are small; 10k
-        # entries is a few hundred MB ceiling against a 24g heap.
+        # entries is a few hundred MB ceiling against a multi-GB heap.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
@@ -90,8 +96,10 @@ def get_spark(app_name: str = "dataworks_spark", cpus: int | None = None) -> Spa
         # local[32] puts driver + all executor threads + every cached
         # table + accumulated localCheckpoint blocks in ONE heap; 8g
         # produced intermittent multi-second full-GC stalls on heavy
-        # kernels mid-bench (the image has 128 GiB — headroom is free)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # kernels mid-bench on a 128 GiB host. So the heap defaults to
+        # half of physical memory, capped at 24g: a fixed 24g outgrew a
+        # swapless 16 GB host, where the kernel OOM-killed the JVM
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )

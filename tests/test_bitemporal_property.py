@@ -126,12 +126,15 @@ def test_asof_matches_bruteforce(spark_global, ops, probe_day, tx_day):
     interpreter on ONE store build per example (r16: the former
     separate bitemporal test re-built the store for 5 more examples to
     probe the same relation — merged, keeping BOTH assertions on every
-    example, 8 bitemporal probes where there were 5)."""
+    example, 8 bitemporal probes where there were 5). ``latest()`` at a
+    store clock of ``vt`` is the same valid-time read."""
     spark = spark_global
     store, brute = _build_store(spark, ops)
     vt = BASE + dt.timedelta(days=probe_day, hours=12)
     got = {r.id: r.body for r in store.as_of(vt).collect()}
     assert got == brute.as_of(vt)
+    at_vt = DocumentStore(store.versions, now_fn=lambda: vt).latest()
+    assert {r.id: r.body for r in at_vt.collect()} == brute.as_of(vt)
     tt = BASE + dt.timedelta(days=tx_day, hours=12)
     got_tt = {r.id: r.body for r in store.as_of(vt, tx_time=tt).collect()}
     assert got_tt == brute.as_of(vt, tt)

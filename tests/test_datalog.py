@@ -559,6 +559,24 @@ def test_negated_constant_is_literal_like_positive(spark):
     assert [r.e for r in neg] == ["s"]
 
 
+def test_absent_attribute_matches_no_triple(spark):
+    """A NULL cell is an absent attribute, as in Crux: a triple with a
+    variable value does not bind it, and its negation keeps the
+    entity."""
+    db = DatalogDB(spark)
+    db.register(
+        "app",
+        spark.createDataFrame(
+            [("a1", "one", "gold"), ("a3", "three", None)], "id string, name string, tier string"
+        ),
+        "id",
+    )
+    pos = db.q(["?e", "?t"], [("?e", "app/tier", "?t")]).collect()
+    neg = db.q(["?e"], [("?e", "app/name", "?n"), ("not", ("?e", "app/tier", "?t"))]).collect()
+    assert [(r.e, r.t) for r in pos] == [("a1", "gold")]
+    assert [r.e for r in neg] == ["a3"]
+
+
 def test_mutual_recursion_joint_fixpoint(spark):
     """r10 (VERDICT #5): A<->B rules evaluate as one joint semi-naive
     fixpoint (r9 raised a clear error; Crux — the reference's rule

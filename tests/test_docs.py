@@ -103,7 +103,8 @@ def test_durable_compaction_prunes_partitions(spark, tmp_path):
     rewrites the log partitioned by (namespace, date(valid_from)); an
     as-of read over the partitioned layout carries PartitionFilters on
     valid_date — pruning at the source, not a post-scan filter — and
-    answers identically to the in-memory store."""
+    answers identically to the in-memory store. The latest view at a
+    clock is the same read, so it prunes the same way."""
     from dataworks_spark.docs.store import as_of_snapshot
 
     s, clock = _store(spark, [("u/1", "v1"), ("app/9", "w1")], T0)
@@ -116,15 +117,15 @@ def test_durable_compaction_prunes_partitions(spark, tmp_path):
     from tests.test_plans import _partition_filters
 
     served = DocumentStore.open_partitioned(spark, path)
-    snap = as_of_snapshot(served, T0)
-    plan = snap._jdf.queryExecution().executedPlan().toString()
-    # depth-aware bracket parse (r13): a bare substring check would
-    # false-pass on `PartitionFilters: []` + valid_date in PushedFilters
-    assert any(
-        pf and "valid_date" in pf for pf in _partition_filters(plan)
-    ), plan
-    got = {r.id: r.body for r in snap.collect()}
-    assert got == {r.id: r.body for r in s2.as_of(T0).collect()}
+    for snap in (as_of_snapshot(served, T0), latest_snapshot(served, now=T0)):
+        plan = snap._jdf.queryExecution().executedPlan().toString()
+        # depth-aware bracket parse (r13): a bare substring check would
+        # false-pass on `PartitionFilters: []` + valid_date in PushedFilters
+        assert any(
+            pf and "valid_date" in pf for pf in _partition_filters(plan)
+        ), plan
+        got = {r.id: r.body for r in snap.collect()}
+        assert got == {r.id: r.body for r in s2.as_of(T0).collect()}
     # namespace is a partition column too: an entity-namespace filter
     # prunes as well
     ns = served.filter(F.col("namespace") == "app")
@@ -658,6 +659,19 @@ def test_write_never_shuffles_the_version_log(spark, monkeypatch, op):
         out, write_jobs = jobs("put_log_pin_write", lambda: s.put_log(batch))
         _, count_jobs = jobs("put_log_pin_count", out.versions.count)
         assert write_jobs <= 2 and count_jobs <= 2, (write_jobs, count_jobs)
+
+
+def test_entity_read_runs_no_window(spark):
+    """A lookup on a write leaf is the as-of filter at the store clock:
+    no Window node and no shuffle over the leaf scan."""
+    s, clock = _store(spark, [(f"u/{i}", "v") for i in range(40)], T0)
+    clock["now"] = T1
+    s = s.put(spark.createDataFrame([("u/0", "w")], "id string, body string"))
+    read = s.entity("u/0")
+    plan = read._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in plan and "Window" not in plan, plan
+    assert not _shuffles_over_log_scan(plan), plan
+    assert [r.body for r in read.collect()] == ["w"]
 
 
 def test_write_chain_leaf_stays_bounded(spark):
